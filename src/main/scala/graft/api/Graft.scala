@@ -8,6 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `.topic_store` log file/capture directory (the reference's native
   * format, via the V2 source), a parquet file/directory, or a catalog
   * table (incl. bucketed tables written by `store.Layout.writeBucketed`).
+  *
+  * A parquet path opens through `store.SkippingFileIndex`: Spark's own
+  * listing (the file-sink log for a `Monitor.capture` store), with files
+  * skipped whose footer min/max rule out an integral data filter.
   */
 object Graft {
   def load(spark: SparkSession, path: String, requireExist: Boolean = true): DataFrame = {
@@ -21,7 +25,7 @@ object Graft {
     else if (path.endsWith(".bag") && f.exists())
       graft.sources.RosBag.read(spark, path)
     else if (f.exists() || path.startsWith("file:") || path.contains("://"))
-      graft.Tables.readParquet(spark, path)
+      graft.store.SkippingFileIndex.wrap(graft.Tables.readParquet(spark, path))
     else if (spark.catalog.tableExists(path))
       spark.table(path)
     else if (!requireExist)

@@ -19,16 +19,19 @@ object Convert {
   /** Incremental copy: append to `dstPath` the rows of `src` whose `key`
     * is not already present. Returns the number of rows copied.
     *
+    * Only a destination that does not exist or holds no data files counts
+    * as empty; any other failure to read it (no `key` column, an unreadable
+    * file) propagates before anything is written — treating it as empty
+    * would re-copy every row.
+    *
     * Single source scan: the anti-join result is WRITTEN first, and the
     * copied-row count comes from the parquet footers of the newly created
     * files (metadata-only, executor-side with the session's Hadoop conf —
     * see FooterStats) — not a second `count()` job re-scanning the source.
     */
   def migrate(spark: SparkSession, src: DataFrame, dstPath: String, key: String): Long = {
-    val existing =
-      try spark.read.parquet(dstPath).select(key)
-      catch { case _: Exception => spark.emptyDataFrame.withColumn(key,
-        org.apache.spark.sql.functions.lit(null).cast("long")) }
+    val existing = FooterStats.readIfPresent(spark, dstPath).map(_.select(key)).getOrElse(
+      spark.emptyDataFrame.withColumn(key, org.apache.spark.sql.functions.lit(null).cast("long")))
     val missing = DocumentStore.cloneMissing(src, existing, key)
     val before = FooterStats.listDataFiles(spark, dstPath).toSet
     missing.write.mode("append").parquet(dstPath)

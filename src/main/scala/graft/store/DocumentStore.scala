@@ -41,15 +41,25 @@ object DocumentStore {
   def findWithMeta(df: DataFrame, predicate: Column, projection: Seq[String]): DataFrame =
     find(df, predicate, projection, MetaCols)
 
-  /** `find_by_id` (database.py:233-235): point lookup. With id-sorted /
-    * bucketed parquet this prunes to a handful of row groups via min-max
-    * stats rather than scanning the table.
+  /** `find_by_id` (database.py:233-235): point lookup. On a store opened
+    * with `Graft.load` (a parquet path, e.g. a `Monitor.capture` store) the
+    * scan reads only the files whose footer min/max range holds `id`
+    * ([[SkippingFileIndex]]): footers are read once per store, in one
+    * parallel job, and cached by (path, length, mtime). A store whose files
+    * each hold a narrow id range — capture output, where every session
+    * lands in its own file — answers from one file. `idCol` must be an
+    * integral column; on any other DataFrame (a catalog table, a
+    * `.topic_store` log) this is a plain filter, and parquet still skips
+    * row groups inside each file it opens.
     */
   def findById(df: DataFrame, idCol: String, id: Long): DataFrame =
     df.filter(col(idCol) === id)
 
   /** `find_by_session_id` (database.py:237-240). Session-partitioned
-    * storage turns this into partition pruning at scale.
+    * storage (`Monitor.capture` writes `session=` directories) turns this
+    * into partition pruning: Spark lists only that session's directory and
+    * no footer is read. On a store where the session is a data column, the
+    * same file skipping as [[findById]] applies.
     */
   def findBySession(df: DataFrame, sessionCol: String, session: Long): DataFrame =
     df.filter(col(sessionCol) === session)
@@ -252,12 +262,16 @@ object DocumentStore {
   /** Estimated document count (database.py:221-231, `estimate=True` →
     * Mongo's `estimated_document_count`, which reads collection metadata
     * instead of scanning). The parquet analog: sum row counts from file
-    * footers — metadata-only, no column data read. Footer reads are
-    * distributed over the executors (a 100 TB table has ~10^5 files; the
-    * driver only lists them).
+    * footers — metadata-only, no column data read. The files are those
+    * Spark's own index lists, so a `Monitor.capture` store counts only the
+    * files its sink log committed (never the log itself, never an orphan
+    * left by a failed batch). Footer reads are distributed over the
+    * executors (a 100 TB table has ~10^5 files; the driver only lists
+    * them). A path that does not exist or holds no data counts 0.
     */
   def countEstimate(spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    FooterStats.rowCount(spark, FooterStats.listDataFiles(spark, path))
+    FooterStats.rowCount(spark, FooterStats.readIfPresent(spark, path).toSeq
+      .flatMap(_.inputFiles).map(uri => new org.apache.hadoop.fs.Path(new java.net.URI(uri)).toString))
 
   /** Incremental clone (`mongodb_to_mongodb_clone_fast`,
     * convert.py:136-186): copy only documents whose id is absent from the

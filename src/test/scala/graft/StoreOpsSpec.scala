@@ -179,6 +179,21 @@ class StoreOpsSpec extends AnyFunSuite {
     assert(spark.read.parquet(tmp).count() === n1 + n2)
   }
 
+  test("migrate refuses a destination it cannot read, and leaves it unchanged") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_migrate_bad").toString
+    val src = ev.select("event_id", "event_type").limit(10)
+    // a destination without the key column is not an empty destination
+    val dst = s"$tmp/nokey"
+    spark.range(10).toDF("other").write.parquet(dst)
+    val files = graft.store.FooterStats.listDataFiles(spark, dst)
+    intercept[org.apache.spark.sql.AnalysisException](Convert.migrate(spark, src, dst, "event_id"))
+    assert(graft.store.FooterStats.listDataFiles(spark, dst) === files)
+    assert(spark.read.parquet(dst).count() === 10)
+    // a directory with no data files is empty: everything copies
+    val empty = new java.io.File(s"$tmp/empty"); empty.mkdirs()
+    assert(Convert.migrate(spark, src, empty.getPath, "event_id") === 10)
+  }
+
   test("TopicStoreLog reads py3 and py2 pickle records, skips the truncated tail") {
     val dir = new java.io.File(getClass.getResource("/sample.topic_store").toURI).getParent
     val rows = graft.sources.TopicStoreLog.read(spark, dir)
