@@ -312,10 +312,10 @@ object RunMonitoring {
     * the windowed per-topic rate/size aggregate is
     * [[graft.streaming.Monitor.rates]] (`--window`/`--watermark` size
     * it). Each micro-batch's UPDATED windows append into
-    * `<dest>@monitor` as a `__batch_id=`-partitioned monitor log
-    * (exactly-once: a replayed batch rewrites its own partition; latest
-    * row per (topic, window) is the current figure, and the history is
-    * time-travelable like every maintained log) unless `no_log`;
+    * `<dest>@monitor` through `Monitor.writeLogBatch`, the maintained
+    * logs' exactly-once writer (latest row per (topic, window) is the
+    * current figure, and the history is time-travelable like every
+    * maintained log) unless `no_log`;
     * `verbose` prints them. Returns the running query — `main` blocks
     * on it, specs drain it.
     */
@@ -353,14 +353,9 @@ object RunMonitoring {
           // table is O(topics × open windows), driver-sized by design.
           // The log write and the verbose print then share the rows.
           val rows = df.collect()
-          if (!noLog && rows.nonEmpty)
-            df.sparkSession
-              .createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-              .withColumn("__batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("__batch_id")
-              .parquet(s"$dest@monitor")
+          if (!noLog) graft.streaming.Monitor.writeLogBatch(
+            df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
+            batchId, s"$dest@monitor")
           if (verbose) rows.sortBy(_.getString(0))
             .foreach(r => println(s"[run_monitoring] $r"))
       }

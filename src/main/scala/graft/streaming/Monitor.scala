@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
 /** Structured-Streaming twin of the reference's capture loop and monitor.
@@ -19,21 +19,48 @@ import org.apache.spark.sql.Row
   */
 object Monitor {
 
-  /** One micro-batch's rows into their own `__batch_id` partition —
-    * the exactly-once write EVERY maintained log shares: dynamic
-    * partition overwrite makes a replayed batch rewrite itself instead
-    * of appending duplicates. The single definition here IS the
-    * durability contract; maintainers only differ in what they fold.
+  /** One micro-batch's rows into their own `__batch_id=N` partition: the
+    * only writer of a maintained log, and so the whole durability
+    * contract. Dynamic partition overwrite makes a replayed batch rewrite
+    * its partition instead of appending duplicates. A batch whose rows
+    * are empty still leaves its (empty) `__batch_id=N` directory, so every
+    * committed batch is visible to [[readLogAsOf]] and [[compactLog]];
+    * Spark's reader skips the empty directory. `partitionCols` nest below
+    * `__batch_id` (the cell index's `cell=`).
     */
-  private implicit class LogBatchWriter(private val df: DataFrame) {
-    def writeLogBatch(batchId: Long, path: String,
-                      partitionCols: Seq[String] = Nil): Unit =
-      df.withColumn("__batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id" +: partitionCols: _*)
-        .parquet(path)
+  private[graft] def writeLogBatch(df: DataFrame, batchId: Long, path: String,
+                                   partitionCols: Seq[String] = Nil): Unit = {
+    df.withColumn("__batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch_id" +: partitionCols: _*)
+      .parquet(path)
+    val dir = new org.apache.hadoop.fs.Path(path, s"__batch_id=$batchId")
+    dir.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).mkdirs(dir)
   }
+
+  /** The one maintained-log sink: each micro-batch of `stream` folds
+    * through `partial` and lands via [[writeLogBatch]], exactly-once — a
+    * batch Structured Streaming replays (restart between the sink write
+    * and the checkpoint commit) rewrites its own `__batch_id` partition
+    * instead of appending duplicates. Partials must be deterministic
+    * given the batch (and the checkpointed state), so a replay rewrites
+    * the same rows. `outputMode` matters only for a stateful `stream`:
+    * `update` for operators that declare it (the gate and journey
+    * machines), `append` otherwise.
+    */
+  private def maintainLog(stream: DataFrame, path: String, checkpoint: String,
+                          trigger: Trigger, partitionCols: Seq[String] = Nil,
+                          outputMode: String = "append")
+                         (partial: DataFrame => DataFrame): StreamingQuery =
+    stream.writeStream
+      .outputMode(outputMode)
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
+        writeLogBatch(partial(df.toDF()), batchId, path, partitionCols)
+      }
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .start()
 
   /** Per-topic message rate and payload size per tumbling window.
     * Same aggregation as the batch `DocumentStore.monitorRates`, expressed
@@ -119,49 +146,27 @@ object Monitor {
       .trigger(trigger)
       .start()
 
-  /** Capture with EXACTLY-ONCE file output via `foreachBatch`: each
-    * micro-batch lands in its own `__batch_id=` partition with dynamic
-    * overwrite, so a replayed batch (restart between sink write and
-    * checkpoint commit — the at-least-once window of the plain file sink)
-    * rewrites its own partition instead of appending duplicates. This is
-    * the idempotent-sink pattern the reference's append-only writers
-    * cannot express.
+  /** Capture with EXACTLY-ONCE file output: the rows as they arrive,
+    * through [[maintainLog]]. The plain file sink of [[capture]] has an
+    * at-least-once window (restart between sink write and checkpoint
+    * commit); this is the idempotent-sink pattern the reference's
+    * append-only writers cannot express.
     */
   def captureExactlyOnce(stream: DataFrame, path: String, checkpoint: String,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        df.withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(identity)
 
   /** Streaming twin of incremental aggregate maintenance
     * (`Analytics.eventStatsPartial/Merge`, §2b 28ah): each micro-batch
-    * appends its O(groups) PARTIAL-aggregate rows into a per-batch
-    * partition of a parquet partial log (dynamic overwrite → a replayed
-    * batch rewrites its own partition, exactly-once like
-    * [[captureExactlyOnce]]). The queryable aggregate is merge-on-read
-    * via [[readEventStats]]; the log compacts with the same
-    * `Layout.compact` machinery as any small-file table (23o). Raw
-    * events are never re-scanned — the maintenance cost per batch is the
-    * batch itself plus O(groups).
+    * logs its O(groups) PARTIAL-aggregate rows through [[maintainLog]].
+    * The queryable aggregate is merge-on-read via [[readEventStats]];
+    * the log compacts with [[compactLog]]. Raw events are never
+    * re-scanned — the maintenance cost per batch is the batch itself
+    * plus O(groups).
     */
   def maintainEventStats(stream: DataFrame, path: String, checkpoint: String,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.Analytics.eventStatsPartial(df.toDF())
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(graft.ops.Analytics.eventStatsPartial)
 
   /** Merge-on-read of the [[maintainEventStats]] partial log: the final
     * aggregate, equal (bit-for-bit, exact integer micros) to a
@@ -175,24 +180,16 @@ object Monitor {
     * statistic, kept current at the ingest door: each micro-batch folds
     * to its per-(series, hour) partial (sum, count) rows
     * (`Analytics.hourlyPartial` — O(series × hours touched), map-side
-    * combined) landing in a per-`__batch_id` partition, exactly-once via
-    * dynamic overwrite (replays rewrite, like every maintained log
-    * here). [[readHourlyBuckets]] merges on read into the exact-integer
-    * bucket-mean table that acf / changepoint / CUSUM / gap fill /
-    * seasonal profile all start from — raw events are never re-scanned
-    * to refresh a time-series analysis.
+    * combined) logged through [[maintainLog]]. [[readHourlyBuckets]]
+    * merges on read into the exact-integer bucket-mean table that acf /
+    * changepoint / CUSUM / gap fill / seasonal profile all start from —
+    * raw events are never re-scanned to refresh a time-series analysis.
     */
   def maintainHourlyBuckets(stream: DataFrame, path: String, checkpoint: String,
                             bucketSec: Long = 3600L,
                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.Analytics.hourlyPartial(df.toDF(), bucketSec)
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      graft.ops.Analytics.hourlyPartial(_, bucketSec))
 
   /** Merge-on-read of the [[maintainHourlyBuckets]] log: (series, h, x)
     * bit-equal to a single-pass bucketing of every event ever streamed.
@@ -204,8 +201,7 @@ object Monitor {
   /** Streaming vocabulary maintenance — the tokenizer-pipeline twin of
     * [[maintainEventStats]]: each micro-batch's documents fold to their
     * word-frequency PARTIAL counts (one map-side-combined groupBy over
-    * the batch — O(batch vocab) rows) and land in a per-batch partition
-    * of a parquet word-count log, exactly-once via dynamic overwrite.
+    * the batch — O(batch vocab) rows), logged through [[maintainLog]].
     * [[readWordCounts]] is the merge-on-read view: the same (word, cnt)
     * table `TextAnalysis.bpePairCounts`/`bpeTrain` start from, so BPE
     * merge candidates stay current against an ingest stream without the
@@ -214,16 +210,9 @@ object Monitor {
   def maintainWordCounts(stream: DataFrame, textCol: Column,
                          path: String, checkpoint: String,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        df.toDF()
-          .select(explode(graft.ops.TextAnalysis.tokens(textCol)).as("word"))
-          .groupBy("word").agg(count(lit(1)).as("cnt"))
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      _.select(explode(graft.ops.TextAnalysis.tokens(textCol)).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("cnt")))
 
   /** Merge-on-read of the [[maintainWordCounts]] partial log: the exact
     * corpus word-frequency table (counts are associative integer sums —
@@ -251,25 +240,18 @@ object Monitor {
   def maintainSample(stream: DataFrame, idColName: String, weightCol: Column,
                      k: Int, path: String, checkpoint: String,
                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        df.toDF()
-          .filter(weightCol > 0)
-          .withColumn("__es_score",
-            graft.ops.TextAnalysis.esScore(idColName, weightCol))
-          .orderBy(col("__es_score").desc, col(idColName))
-          .limit(k)
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      _.filter(weightCol > 0)
+        .withColumn("__es_score", graft.ops.TextAnalysis.esScore(idColName, weightCol))
+        .orderBy(col("__es_score").desc, col(idColName))
+        .limit(k))
 
   /** Maintained A/B experiment cells — 28cd's live half: the per-user
     * (convs, cents) cells are ADDITIVE integers, so each micro-batch
     * lands only its own per-user partial aggregate (O(active users per
-    * batch) rows) and the merge-on-read sum equals the batch
-    * `Analytics.abUserCells` over everything ever streamed exactly.
+    * batch) rows, through [[maintainLog]]) and the merge-on-read sum
+    * equals the batch `Analytics.abUserCells` over everything ever
+    * streamed exactly.
     * The variant split is derived from the id at READ time (one md5
     * expression shared with the batch op), so the log is
     * experiment-epoch-agnostic. The lift and chi-square views run the
@@ -279,24 +261,18 @@ object Monitor {
   def maintainAbCells(stream: DataFrame, path: String, checkpoint: String,
                       convValue: Double = 150.0,
                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.Analytics.abUserCells(df.toDF(), convValue)
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      graft.ops.Analytics.abUserCells(_, convValue))
 
   /** Maintained journey-transition log — 28cx's live half: the Markov
     * attribution chain kept current at the ingest door. The
     * `Attribution.transitionsStream` machine emits ADDITIVE (src, dst,
     * n) partials (a conversion's journey exactly once at the
     * conversion, a non-converter's at idle reap), each micro-batch's
-    * partial sums land in a per-`__batch_id` partition (dynamic
-    * overwrite — replays rewrite, exactly-once), and the merge-on-read
-    * sum is the transition matrix. `readMarkovAttribution` then runs
-    * the SAME exact-rational solve as the batch readout
+    * partial sums are logged through [[maintainLog]] (update mode, as
+    * the machine declares), and the merge-on-read sum is the transition
+    * matrix. `readMarkovAttribution` then runs the SAME exact-rational
+    * solve as the batch readout
     * (`Analytics.markovAttribution` — shared epilogue, integer inputs,
     * bit-equal by construction).
     */
@@ -305,16 +281,8 @@ object Monitor {
                                  idleTimeoutMs: Long = 30L * 24 * 3600 * 1000,
                                  trigger: Trigger = Trigger.AvailableNow())
                                 (implicit spark: org.apache.spark.sql.SparkSession): StreamingQuery =
-    Attribution.transitionsStream(stream, idleTimeoutMs = idleTimeoutMs).toDF()
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        df.toDF().groupBy("src", "dst").agg(sum("n").as("n"))
-          .writeLogBatch(batchId, path)
-      }
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(Attribution.transitionsStream(stream, idleTimeoutMs = idleTimeoutMs)
+      .toDF(), path, checkpoint, trigger, outputMode = "update")(journeyTransFold)
 
   /** The additive merge shared by [[readJourneyTransitions]] and
     * compaction of a [[maintainJourneyTransitions]] log. */
@@ -378,7 +346,7 @@ object Monitor {
     * of [[maintainWordCounts]]: each micro-batch's documents fold to
     * their ±window (center, context) PARTIAL pair counts
     * (`TextAnalysis.skipgramPairs` over the batch — O(batch vocab²)
-    * rows at most) and land exactly-once in a per-batch partition.
+    * rows at most), logged through [[maintainLog]].
     * With [[readWordCounts]] (the negative-sampling distribution base,
     * `TextAnalysis.negSamplingTable` shape) this keeps BOTH word2vec
     * inputs — positive pairs and negative distribution — current at the
@@ -387,14 +355,8 @@ object Monitor {
   def maintainCoocCounts(stream: DataFrame, textCol: Column,
                          path: String, checkpoint: String, window: Int = 2,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.TextAnalysis.skipgramPairs(df.toDF(), textCol, window)
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      graft.ops.TextAnalysis.skipgramPairs(_, textCol, window))
 
   /** Merge-on-read of the [[maintainCoocCounts]] partial log: exact
     * corpus-wide (center, context) counts — associative sums, equal to
@@ -408,9 +370,9 @@ object Monitor {
     * embedding corpus kept current at the ingest door: each micro-batch
     * folds to its d(d+1)/2-row integer Gram partial
     * (`Similarity.gramMatrix` — the per-partition syrk, already
-    * collapsed map-side) landing in a per-`__batch_id` partition,
-    * exactly-once via dynamic overwrite. Because the partials are
-    * micro-rounded INTEGER sums, merging is associative: the read-time
+    * collapsed map-side) logged through [[maintainLog]]. Because the
+    * partials are micro-rounded INTEGER sums, merging is associative: the
+    * read-time
     * Gram — and everything derived from it (covariance, whitening, the
     * [[graft.ops.Similarity.pcaPowerFromGram]] principal direction) —
     * is bit-equal to a batch recompute over every vector ever streamed,
@@ -419,14 +381,8 @@ object Monitor {
   def maintainGram(stream: DataFrame, path: String, checkpoint: String,
                    dims: Int = 64,
                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.Similarity.gramMatrix(df.toDF(), dims)
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      graft.ops.Similarity.gramMatrix(_, dims))
 
   /** Merge-on-read of the [[maintainGram]] log: (i, j, n, sxy_micro),
     * bit-equal to `Similarity.gramMatrix` over the full streamed corpus.
@@ -442,8 +398,7 @@ object Monitor {
     * the FROZEN milli centroids (the integer objective of
     * `Similarity.kmeansTrain`, broadcast k×d table, one scan) and folds
     * to its (cell, dim, n, sm) Lloyd-update partial — O(k·d) rows per
-    * batch regardless of batch size — landing in a per-`__batch_id`
-    * partition, exactly-once via dynamic overwrite (replays rewrite).
+    * batch regardless of batch size — logged through [[maintainLog]].
     * Partials are associative integer sums, so [[readKmeansStats]] and
     * the `kmeansUpdateFromStats` epilogue yield the EXACT next-round
     * centroids a batch Lloyd update would compute over every vector
@@ -453,14 +408,8 @@ object Monitor {
   def maintainKmeansStats(stream: DataFrame, centroids: Array[Array[Long]],
                           path: String, checkpoint: String, dims: Int = 64,
                           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.Similarity.kmeansPartialStats(df.toDF(), centroids, dims)
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      graft.ops.Similarity.kmeansPartialStats(_, centroids, dims))
 
   /** Merge-on-read of the [[maintainKmeansStats]] log: (cell, dim, n,
     * sm), bit-equal to one `Similarity.kmeansPartialStats` pass over the
@@ -483,6 +432,19 @@ object Monitor {
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("__batch_id="))
       .map(_.stripPrefix("__batch_id=").toLong)
+  }
+
+  /** Nested `name=value` partition directories under `dir`, in order —
+    * how [[compactLog]] discovers a log's sub-partitioning (e.g. the
+    * cell index's `cell=`) instead of trusting a caller to restate it.
+    */
+  private def nestedPartitionCols(fs: org.apache.hadoop.fs.FileSystem,
+                                  dir: org.apache.hadoop.fs.Path): Seq[String] = {
+    val kids = fs.listStatus(dir).filter(_.isDirectory)
+      .map(_.getPath).filter(_.getName.contains("="))
+    val names = kids.map(_.getName.takeWhile(_ != '=')).distinct
+    if (kids.isEmpty || names.length != 1) Nil
+    else names.head +: nestedPartitionCols(fs, kids.head)
   }
 
   /** Compact a maintained partial log — the small-file answer for every
@@ -512,19 +474,6 @@ object Monitor {
     * `partitionCols` preserves nested sub-partitioning through the
     * rewrite (the cell-partitioned ANN index keeps its `cell=` layout).
     */
-  /** Nested `name=value` partition directories under `dir`, in order —
-    * how [[compactLog]] discovers a log's sub-partitioning (e.g. the
-    * cell index's `cell=`) instead of trusting a caller to restate it.
-    */
-  private def nestedPartitionCols(fs: org.apache.hadoop.fs.FileSystem,
-                                  dir: org.apache.hadoop.fs.Path): Seq[String] = {
-    val kids = fs.listStatus(dir).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.contains("="))
-    val names = kids.map(_.getName.takeWhile(_ != '=')).distinct
-    if (kids.isEmpty || names.length != 1) Nil
-    else names.head +: nestedPartitionCols(fs, kids.head)
-  }
-
   def compactLog(spark: org.apache.spark.sql.SparkSession, path: String,
                  fold: DataFrame => DataFrame = identity,
                  partitionCols: Seq[String] = Nil,
@@ -538,26 +487,24 @@ object Monitor {
       val prevGen = ids.filter(_ < 0L).minOption
       val prevThru = prevGen.map(g => -g - 1L).getOrElse(-1L)
       val absorb = pos.filter(id => id > prevThru && id < frontier)
-      if (absorb.nonEmpty) {
-        // preserve the log's sub-partitioning through the rewrite —
-        // discovered from the layout itself, so a default-args call on a
-        // nested log (the cell index) cannot flatten it into a mixed-depth
-        // directory tree that breaks partition discovery
-        val nested =
-          if (partitionCols.nonEmpty) partitionCols
-          else nestedPartitionCols(fs,
-            new org.apache.hadoop.fs.Path(p, s"__batch_id=$frontier"))
-        val newThru = frontier - 1L
-        val newGen = -(newThru + 1L)
-        fold(spark.read.parquet(path)
-            .filter(col("__batch_id").isin((prevGen.toSeq ++ absorb): _*))
-            .drop("__batch_id"))
-          .withColumn("__batch_id", lit(newGen))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id" +: nested: _*)
-          .parquet(path)
-      }
+      // the newest batch holding rows shows the layout: an empty batch's
+      // directory says nothing, and a log without rows has nothing to fold
+      if (absorb.nonEmpty) (Seq(frontier) ++ absorb.sorted.reverse ++ prevGen)
+        .map(id => new org.apache.hadoop.fs.Path(p, s"__batch_id=$id"))
+        .find(fs.listStatus(_).nonEmpty)
+        .foreach { sample =>
+          // preserve the log's sub-partitioning through the rewrite —
+          // discovered from the layout itself, so a default-args call on a
+          // nested log (the cell index) cannot flatten it into a mixed-depth
+          // directory tree that breaks partition discovery
+          val nested =
+            if (partitionCols.nonEmpty) partitionCols else nestedPartitionCols(fs, sample)
+          val newGen = -frontier // -(thru + 1), absorbing through frontier - 1
+          writeLogBatch(fold(spark.read.parquet(path)
+              .filter(col("__batch_id").isin((prevGen.toSeq ++ absorb): _*))
+              .drop("__batch_id")),
+            newGen, path, nested)
+        }
       // garbage collection — everything already invisible to readLog.
       // For logs SERVED CONCURRENTLY, pass gc = false and run [[gcLog]]
       // a grace period past the generation write: a reader that listed
@@ -677,9 +624,8 @@ object Monitor {
     * at the ingest door: each arriving embedding is assigned to its cell
     * against the FROZEN milli centroids (`Similarity.assignToCentroids`,
     * broadcast k×d table, one scan) and lands under
-    * `__batch_id=…/cell=…`, exactly-once via dynamic overwrite (a
-    * replayed batch deterministically reproduces the same cell set and
-    * rewrites only its own partitions). Probes then read ONLY their
+    * `__batch_id=…/cell=…` through [[maintainLog]] (a replayed batch
+    * reproduces the same cell set). Probes then read ONLY their
     * cells' directories — `probeCells` plans a partition-pruned scan, so
     * ANN serving cost at 100 TB is `nprobe/k` of the corpus per query
     * batch, enforced by layout instead of a runtime filter.
@@ -687,14 +633,8 @@ object Monitor {
   def maintainCellIndex(stream: DataFrame, centroids: Array[Array[Long]],
                         path: String, checkpoint: String, dims: Int = 64,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.Similarity.cellIndexRows(df.toDF(), centroids, dims)
-          .writeLogBatch(batchId, path, Seq("cell"))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger, partitionCols = Seq("cell"))(
+      graft.ops.Similarity.cellIndexRows(_, centroids, dims))
 
   /** Partition-pruned read of the [[maintainCellIndex]] layout: only the
     * probed cells' directories are scanned (the `cell` predicate is a
@@ -708,7 +648,8 @@ object Monitor {
     * the ingest door: each micro-batch of (asset_id, kind, payload) rows
     * runs the real decoders (`Multimodal.decodeFeatures` — WAV/BMP/
     * JPEG/PNG/GIF for real, stub fold otherwise) and lands its feature
-    * rows exactly-once in a per-`__batch_id` partition; downstream
+    * rows through [[writeLogBatch]], exactly-once like [[maintainLog]]
+    * (it writes two logs per batch, so it keeps its own sink); downstream
     * training readers join features without ever touching the raw bytes
     * again (the decode cost is paid once per asset, not per consumer).
     *
@@ -733,13 +674,12 @@ object Monitor {
     stream.writeStream
       .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
         val assets = df.toDF()
-        graft.ops.Multimodal.decodeFeatures(assets, dim)
-          .writeLogBatch(batchId, path)
+        writeLogBatch(graft.ops.Multimodal.decodeFeatures(assets, dim), batchId, path)
         framesPath.foreach { fp =>
-          graft.ops.Multimodal.videoFrameFeatures(assets, everyN, dim)
+          writeLogBatch(graft.ops.Multimodal.videoFrameFeatures(assets, everyN, dim)
             .unionByName(
-              graft.ops.Multimodal.videoFrameFeaturesExternal(assets, everyN, dim))
-            .writeLogBatch(batchId, fp)
+              graft.ops.Multimodal.videoFrameFeaturesExternal(assets, everyN, dim)),
+            batchId, fp)
         }
       }
       .option("checkpointLocation", checkpoint)
@@ -765,9 +705,8 @@ object Monitor {
     * those cells' directories from the index (the probe side is a
     * broadcast build, so dynamic partition pruning reuses it to prune
     * the `cell=` listing — no driver-side cell collect on the serving
-    * path), scores candidates by EXACT cosine and
-    * emits top-`k` per query — exactly-once into a per-`__batch_id`
-    * partition of `outPath`. Per batch the work is
+    * path), scores candidates by EXACT cosine and emits top-`k` per
+    * query into `outPath` through [[maintainLog]]. Per batch the work is
     * O(batch · nprobe/k_cells · corpus-per-cell · d): the corpus is
     * touched only through the probed directories, and re-centering the
     * quantizer is a centroid swap, not an index rebuild.
@@ -776,25 +715,18 @@ object Monitor {
                      indexPath: String, outPath: String, checkpoint: String,
                      k: Int = 10, nprobe: Int = 2, dims: Int = 64,
                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val spark = df.sparkSession
-        graft.ops.Similarity.probeIndexTopK(
-            readLog(spark, indexPath),
-            df.toDF(), centroids, k, nprobe, dims)
-          .writeLogBatch(batchId, outPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(queries, outPath, checkpoint, trigger) { df =>
+      graft.ops.Similarity.probeIndexTopK(
+        readLog(df.sparkSession, indexPath), df, centroids, k, nprobe, dims)
+    }
 
   /** Maintained BM25 postings index — full-text retrieval current at the
     * ingest door: each micro-batch of documents tokenizes ONCE and folds
     * to its (doc_id, dl, token, tf) postings rows — O(batch tokens) rows
-    * per batch, the per-doc sufficient statistic BM25 needs — into a
-    * per-`__batch_id` partition, exactly-once via dynamic overwrite.
-    * Documents are append-only (each lands wholly in one batch), so the
-    * read-time union IS the full-corpus postings table and
+    * per batch, the per-doc sufficient statistic BM25 needs — through
+    * [[maintainLog]]. Documents are append-only (each lands wholly in
+    * one batch), so the read-time union IS the full-corpus postings
+    * table and
     * `TextAnalysis.bm25TopKFromIndex` off it scores BIT-equal to batch
     * `bm25TopK` over every doc ever streamed — the corpus text is never
     * re-tokenized to serve a query. Each batch also logs one DOC-STATS
@@ -805,19 +737,13 @@ object Monitor {
     */
   def maintainBm25Index(stream: DataFrame, path: String, checkpoint: String,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val docs = df.toDF()
-        val statsRows = docs.select(col("doc_id"),
-            size(graft.ops.TextAnalysis.tokens(col("text"))).cast("long").as("dl"),
-            lit(null).cast("string").as("token"), lit(0L).as("tf"))
-        graft.ops.TextAnalysis.bm25Postings(docs, col("doc_id"), col("text"))
-          .unionByName(statsRows)
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger) { docs =>
+      val statsRows = docs.select(col("doc_id"),
+          size(graft.ops.TextAnalysis.tokens(col("text"))).cast("long").as("dl"),
+          lit(null).cast("string").as("token"), lit(0L).as("tf"))
+      graft.ops.TextAnalysis.bm25Postings(docs, col("doc_id"), col("text"))
+        .unionByName(statsRows)
+    }
 
   /** Merge-on-read of the [[maintainBm25Index]] log: the full-corpus
     * (doc_id, dl, token, tf) postings table.
@@ -830,27 +756,21 @@ object Monitor {
     * micro-batch of documents is scored against the FROZEN integer
     * weights (`TextAnalysis.classifierTrain`'s literal-weight margin, one
     * codegen'd scan) and folds to ONE (m, g0..g6) misclassified-gradient
-    * row per batch — O(1) rows per batch at any batch size — in a
-    * per-`__batch_id` partition, exactly-once via dynamic overwrite.
-    * Counts and gradient sums are associative integers, so the merged log
-    * equals the full-corpus gradient bit-for-bit and one truncating
+    * row per batch — O(1) rows per batch at any batch size — through
+    * [[maintainLog]]. Counts and gradient sums are associative
+    * integers, so the merged log equals the full-corpus gradient
+    * bit-for-bit and one truncating
     * update step off it IS the batch round over every doc ever streamed;
     * re-training = one step + a weight swap.
     */
   def maintainClassifierGrad(stream: DataFrame, weights: Array[Long],
                              positive: Column, path: String, checkpoint: String,
                              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.TextAnalysis.classifierGradient(
-            graft.ops.TextAnalysis.classifierFeatures(
-              df.toDF(), col("doc_id"), col("text"), positive),
-            weights)
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger) { df =>
+      graft.ops.TextAnalysis.classifierGradient(
+        graft.ops.TextAnalysis.classifierFeatures(df, col("doc_id"), col("text"), positive),
+        weights)
+    }
 
   /** Merge-on-read of the [[maintainClassifierGrad]] log: one
     * (m, g0..g6) row, bit-equal to `TextAnalysis.classifierGradient`
@@ -866,9 +786,10 @@ object Monitor {
   /** Maintained Count-Min log — approximate per-item frequencies current
     * at the ingest door, at ONE binary row per micro-batch: each batch
     * folds to its own CM sketch (`graft_cm_sketch` — cell merges are
-    * elementwise adds, so the batch sketch is partitioning-exact) and
-    * [[readCmSketch]] unions the rows into bytes IDENTICAL to sketching
-    * every row ever streamed in one pass. The log is O(batches) rows of
+    * elementwise adds, so the batch sketch is partitioning-exact),
+    * logged through [[maintainLog]], and [[readCmSketch]] unions the
+    * rows into bytes IDENTICAL to sketching every row ever streamed in
+    * one pass. The log is O(batches) rows of
     * O(width·depth) bytes regardless of stream volume — the cheapest
     * maintained statistic here — and serves `graft_cm_est` probes
     * directly (e.g. a hot-key detector feeding the salting/cap knobs).
@@ -877,18 +798,11 @@ object Monitor {
                        path: String, checkpoint: String,
                        width: Int = 1024, depth: Int = 4,
                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val spark = df.sparkSession
-        graft.functions.CmFunctions.register(spark)
-        df.toDF()
-          .select(itemCol.cast("string").as("item"))
-          .agg(expr(s"graft_cm_sketch(item, 1L, $width, $depth)").as("sk"))
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger) { df =>
+      graft.functions.CmFunctions.register(df.sparkSession)
+      df.select(itemCol.cast("string").as("item"))
+        .agg(expr(s"graft_cm_sketch(item, 1L, $width, $depth)").as("sk"))
+    }
 
   /** Merge-on-read of the [[maintainCmSketch]] log: one sketch,
     * byte-equal to a single-pass sketch of the full streamed history.
@@ -909,24 +823,18 @@ object Monitor {
     * BYTE-equal to single-pass sketching of the full streamed history
     * under any batch split, and pairs of group rows feed
     * `graft_kmv_inter` directly. O(groups) rows of O(k) longs per
-    * micro-batch regardless of stream volume.
+    * micro-batch regardless of stream volume, logged through
+    * [[maintainLog]].
     */
   def maintainKmvSketch(stream: DataFrame, keyCol: Column, valueCol: Column,
                         path: String, checkpoint: String, k: Int = 1024,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val spark = df.sparkSession
-        graft.functions.KmvFunctions.register(spark)
-        df.toDF()
-          .select(keyCol.cast("string").as("grp"), valueCol.as("v"))
-          .groupBy("grp")
-          .agg(expr(s"graft_kmv_sketch(v, $k)").as("sk"))
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger) { df =>
+      graft.functions.KmvFunctions.register(df.sparkSession)
+      df.select(keyCol.cast("string").as("grp"), valueCol.as("v"))
+        .groupBy("grp")
+        .agg(expr(s"graft_kmv_sketch(v, $k)").as("sk"))
+    }
 
   /** Merge-on-read of the [[maintainKmvSketch]] log: one sketch row per
     * group, byte-equal to single-pass sketching of the full history.
@@ -943,31 +851,23 @@ object Monitor {
     * batch folds per group to ONE `graft_qsketch` bottom-k row (the
     * deterministic md5-rank sample — bottom-k of a union equals bottom-k
     * of the parts' bottom-k's, so merges are associative, idempotent and
-    * byte-stable under any batch split), exactly-once via dynamic
-    * overwrite. [[readQSketch]]'s union row per group is BYTE-equal to
-    * single-pass sketching of the full streamed history, and quantile
-    * reads off it equal the batch operator's.
+    * byte-stable under any batch split), logged through
+    * [[maintainLog]]. [[readQSketch]]'s union row per group is
+    * BYTE-equal to single-pass sketching of the full streamed history,
+    * and quantile reads off it equal the batch operator's.
     */
   def maintainQSketch(stream: DataFrame, keyCol: Column, valueCol: Column,
                       idCol: Column, path: String, checkpoint: String,
                       k: Int = 1024,
                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val spark = df.sparkSession
-        graft.functions.QSketchFunctions.register(spark)
-        df.toDF()
-          .select(keyCol.as("key"), valueCol.cast("double").as("v"),
-            idCol.cast("string").as("id"))
-          .filter(col("v").isNotNull)
-          .groupBy(col("key"))
-          .agg(expr(s"graft_qsketch(v, id, $k)").as("sk"),
-            count(lit(1)).as("cnt"))
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger) { df =>
+      graft.functions.QSketchFunctions.register(df.sparkSession)
+      df.select(keyCol.as("key"), valueCol.cast("double").as("v"),
+          idCol.cast("string").as("id"))
+        .filter(col("v").isNotNull)
+        .groupBy(col("key"))
+        .agg(expr(s"graft_qsketch(v, id, $k)").as("sk"), count(lit(1)).as("cnt"))
+    }
 
   /** Merge-on-read of the [[maintainQSketch]] log: one (key, sketch,
     * count) row per group, the sketch byte-equal to a single-pass
@@ -985,24 +885,16 @@ object Monitor {
     * their MinHash band rows in the parquet index [[nearDupStream]] and
     * `Dedup.lshCandidatesAgainst` join against — the ingest loop that
     * keeps the dedup index current without ever re-banding the corpus.
-    * Exactly-once like [[maintainEventStats]]: a batch writes ONLY its
-    * own `__batch_id` partition via dynamic overwrite, so a replayed
-    * batch rewrites instead of duplicating, and a reader never sees a
-    * torn batch. Index growth is O(docs · bands) rows regardless of
-    * corpus size; readers drop the bookkeeping column.
+    * Logged through [[maintainLog]]. Index growth is O(docs · bands)
+    * rows regardless of corpus size; readers drop the bookkeeping
+    * column.
     */
   def maintainLshIndex(stream: DataFrame, idCol: Column, textCol: Column,
                        path: String, checkpoint: String,
                        numHashes: Int = 16, bands: Int = 4,
                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.Dedup.lshBands(df.toDF(), idCol, textCol, numHashes, bands)
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      graft.ops.Dedup.lshBands(_, idCol, textCol, numHashes, bands))
 
   /** The [[maintainLshIndex]] parquet log as the band table the batch and
     * streaming candidate joins expect.
@@ -1015,8 +907,8 @@ object Monitor {
     * (shingle, first_doc) partial per distinct gram it introduced (min
     * doc_id within the batch), so an increment can be NOVELTY-SCORED
     * against everything ingested before it without re-shingling the
-    * corpus ([[readGramIndex]] + `TextAnalysis.noveltyAgainst`). Min is
-    * associative and idempotent: replays rewrite their own partition,
+    * corpus ([[readGramIndex]] + `TextAnalysis.noveltyAgainst`); logged
+    * through [[maintainLog]]. Min is associative and idempotent:
     * merge-on-read takes the min across batches, ingest order never
     * changes a verdict that was already decided. `compactLog(fold)`
     * with a min-groupBy collapses partials on schedule (48ac).
@@ -1024,15 +916,9 @@ object Monitor {
   def maintainGramIndex(stream: DataFrame, idCol: Column, textCol: Column,
                         path: String, checkpoint: String,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.Dedup.shingles(df.toDF(), idCol, textCol, None)
-          .groupBy("shingle").agg(min("doc_id").as("first_doc"))
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      graft.ops.Dedup.shingles(_, idCol, textCol, None)
+        .groupBy("shingle").agg(min("doc_id").as("first_doc")))
 
   /** Merge-on-read of the [[maintainGramIndex]] log: one (shingle,
     * first_doc) row per gram ever streamed.
@@ -1046,27 +932,21 @@ object Monitor {
     * distinct line it introduced (min (doc_id, line_idx) within the
     * batch), so an increment can drop corpus-repeated boilerplate
     * ([[readLineIndex]] + `TextAnalysis.dedupLinesAgainst`) without
-    * re-exploding anything ingested before it. Min over the (doc, idx)
-    * struct is associative and idempotent: replays rewrite their own
-    * partition, merge-on-read takes the min across batches, ingest
+    * re-exploding anything ingested before it; logged through
+    * [[maintainLog]]. Min over the (doc, idx) struct is associative and
+    * idempotent: merge-on-read takes the min across batches, ingest
     * order never changes a verdict that was already decided.
     * `compactLog(fold)` with a min-groupBy collapses partials (48ac).
     */
   def maintainLineIndex(stream: DataFrame, idCol: Column, textCol: Column,
                         path: String, checkpoint: String,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.TextAnalysis.docLines(df.toDF(), idCol, textCol)
-          .groupBy(col("line"))
-          .agg(min(struct(col("doc_id"), col("line_idx"))).as("first"))
-          .select(col("line"), col("first.doc_id").as("first_doc"),
-            col("first.line_idx").as("first_idx"))
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      graft.ops.TextAnalysis.docLines(_, idCol, textCol)
+        .groupBy(col("line"))
+        .agg(min(struct(col("doc_id"), col("line_idx"))).as("first"))
+        .select(col("line"), col("first.doc_id").as("first_doc"),
+          col("first.line_idx").as("first_idx")))
 
   /** Merge-on-read of the [[maintainLineIndex]] log: one (line,
     * first_doc, first_idx) row per line ever streamed.
@@ -1084,30 +964,23 @@ object Monitor {
     * (`TextAnalysis.classifierTrain`) and then watches every
     * increment's score distribution against those FROZEN weights. Each
     * micro-batch logs one (margin, p, q) additive partial per distinct
-    * margin it saw (pos/neg label counts); sums are associative and
-    * replays rewrite their own `__batch_id` partition, so merge-on-read
-    * is exact and `compactLog(fold)` collapses partials (48ac). The
-    * merged histogram serves the SAME epilogues the batch path states —
-    * [[scoreHistAuc]] is bit-equal to `TextAnalysis.classifierAuc` when
-    * the frozen weights are the full-corpus trained ones, and the
-    * histogram is exactly what a PSI reference window reads.
+    * margin it saw (pos/neg label counts) through [[maintainLog]]; sums
+    * are associative, so merge-on-read is exact and `compactLog(fold)`
+    * collapses partials (48ac). The merged histogram serves the SAME
+    * epilogues the batch path states — [[scoreHistAuc]] is bit-equal to
+    * `TextAnalysis.classifierAuc` when the frozen weights are the
+    * full-corpus trained ones, and the histogram is exactly what a PSI
+    * reference window reads.
     */
   def maintainScoreHist(stream: DataFrame, idCol: Column, textCol: Column,
                         positive: Column, weights: Array[Long],
                         path: String, checkpoint: String,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.TextAnalysis
-          .scoreWithWeights(df.toDF(), idCol, textCol, positive, weights)
-          .groupBy(col("margin"))
-          .agg(sum(when(col("y") === 1L, 1L).otherwise(0L)).as("p"),
-            sum(when(col("y") === 1L, 0L).otherwise(1L)).as("q"))
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(
+      graft.ops.TextAnalysis.scoreWithWeights(_, idCol, textCol, positive, weights)
+        .groupBy(col("margin"))
+        .agg(sum(when(col("y") === 1L, 1L).otherwise(0L)).as("p"),
+          sum(when(col("y") === 1L, 0L).otherwise(1L)).as("q")))
 
   /** Merge-on-read of the [[maintainScoreHist]] log: one (margin, p, q)
     * row per distinct margin ever streamed.
@@ -1157,8 +1030,8 @@ object Monitor {
   /** Maintained engagement log — the DAU/MAU family's live half: each
     * micro-batch logs its DISTINCT (user_id, day, mon) activity triples
     * (`Analytics.userDays` — distinct is idempotent, so replays and any
-    * ingest split union to exactly the batch projection) through the
-    * exactly-once `writeLogBatch`; merge-on-read is one more distinct,
+    * ingest split union to exactly the batch projection) through
+    * [[maintainLog]]; merge-on-read is one more distinct,
     * and `compactLog(fold)` with a distinct collapses partials (48ac).
     * [[readStickiness]] serves the SAME epilogue as the batch
     * `events_stickiness` (`Analytics.stickinessFromUserDays` — one
@@ -1166,13 +1039,7 @@ object Monitor {
     */
   def maintainEngagement(stream: DataFrame, path: String, checkpoint: String,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.ops.Analytics.userDays(df.toDF()).writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger)(graft.ops.Analytics.userDays)
 
   /** Merge-on-read of the [[maintainEngagement]] log: the distinct
     * (user_id, day, mon) projection of everything ever streamed.
@@ -1193,11 +1060,11 @@ object Monitor {
     * `action_server_video` mode end-to-end (scenario.py:101-137: gate the
     * data stream by the control stream's start/stop messages, save every
     * captured row). Composes [[GatedCapture.gatedStream]]'s per-gate
-    * boolean state machine with the exactly-once `writeLogBatch` sink: a
-    * replayed micro-batch reproduces the same captured rows (the machine
-    * is deterministic given per-gate event-time-ordered arrival, and its
-    * state store versions with the checkpoint) and rewrites only its own
-    * `__batch_id` partition. Read the captured log with [[readLog]];
+    * boolean state machine with the [[maintainLog]] sink (update mode,
+    * as the machine declares): a replayed micro-batch reproduces the same
+    * captured rows (the machine is deterministic given per-gate
+    * event-time-ordered arrival, and its state store versions with the
+    * checkpoint). Read the captured log with [[readLog]];
     * [[compactLog]] applies like every maintained log here.
     *
     * `lateness` bounds cross-GATE event-time disorder: the watermark is
@@ -1213,15 +1080,8 @@ object Monitor {
                         idleTimeoutMs: Long = 30L * 24 * 3600 * 1000,
                         lateness: String = "1 hour"): StreamingQuery = {
     implicit val spark: org.apache.spark.sql.SparkSession = rows.sparkSession
-    GatedCapture.gatedStream(rows, idleTimeoutMs, lateness).toDF()
-      .writeStream
-      .outputMode("update") // the gate machine declares Update; rows never retract
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        df.toDF().writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(GatedCapture.gatedStream(rows, idleTimeoutMs, lateness).toDF(),
+      path, checkpoint, trigger, outputMode = "update")(identity)
   }
 
   /** Capture INTO the reference's native format: each micro-batch's `doc`
@@ -1400,27 +1260,21 @@ object Monitor {
   /** Self-maintaining SRP probe index — [[maintainLshIndex]] for
     * embeddings: each micro-batch's vectors land their (v, norm, bucket)
     * probe rows in a per-batch partition of the parquet index
-    * [[embNearDupStream]] joins against, exactly-once via dynamic
-    * overwrite. Index work per batch is O(batch · planes) dots; the
-    * corpus never re-buckets.
+    * [[embNearDupStream]] joins against, through [[maintainLog]]. Index
+    * work per batch is O(batch · planes) dots; the corpus never
+    * re-buckets.
     */
   def maintainSrpIndex(stream: DataFrame, idCol: Column, embCol: Column,
                        path: String, checkpoint: String, planes: Int = 4,
                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        graft.functions.VectorFunctions.register(df.sparkSession)
-        df.toDF()
-          .select(idCol.as("vec_id"), embCol.as("embedding"))
-          .withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
-          .withColumn("norm", expr("sqrt(graft_dot(v, v))"))
-          .withColumn("bucket", graft.ops.Similarity.bucketExpr(planes))
-          .drop("embedding")
-          .writeLogBatch(batchId, path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    maintainLog(stream, path, checkpoint, trigger) { df =>
+      graft.functions.VectorFunctions.register(df.sparkSession)
+      df.select(idCol.as("vec_id"), embCol.as("embedding"))
+        .withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
+        .withColumn("norm", expr("sqrt(graft_dot(v, v))"))
+        .withColumn("bucket", graft.ops.Similarity.bucketExpr(planes))
+        .drop("embedding")
+    }
 
   /** Merge-on-read of the [[maintainSrpIndex]] log as the probe table
     * [[embNearDupStream]] expects.

@@ -55,7 +55,10 @@ object Sessionizer {
     out.iterator
   }
 
-  /** Wire the stateful fold over a (possibly streaming) Dataset[Event]. */
+  /** Wire the stateful fold over a (possibly streaming) Dataset[Event].
+    * The processing-time timeout keeps scheduling data-less batches, so a
+    * drain-and-stop trigger (`AvailableNow`) does not end the query.
+    */
   def sessions(events: Dataset[Event], gapSec: Long)
               (implicit spark: SparkSession): Dataset[SessionOut] = {
     import spark.implicits._

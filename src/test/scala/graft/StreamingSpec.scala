@@ -149,6 +149,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(written.filter(col("session") === 2).count() === 20)
   }
 
+  /** The sessionizer's processing-time timeout keeps scheduling
+    * data-less batches, so neither `AvailableNow` nor `processAllAvailable`
+    * ever returns: stop the query once its data batch has committed.
+    */
+  private def stopAfterDataBatch(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    try {
+      while (q.isActive && !q.recentProgress.exists(_.numInputRows > 0) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      q.exception.foreach(e => throw e)
+    } finally q.stop()
+  }
+
   test("stateful sessionizer matches the batch sessionize aggregation") {
     implicit val s = spark
     import spark.implicits._
@@ -158,14 +171,11 @@ class StreamingSpec extends AnyFunSuite {
     val evs = sampleEvents.map(e => Sessionizer.Event(e.user_id, e.ts.getTime / 1000))
     input.addData(evs: _*)
 
-    // AvailableNow drains the source and stops by itself — with a
-    // processing-time timeout armed, processAllAvailable would block on
-    // the scheduled timeout wake-up.
     val q = Sessionizer.sessions(input.toDS(), gapSec = 600L)
       .writeStream.outputMode("append").format("memory").queryName("sess_out")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    try q.awaitTermination(120000) finally q.stop()
+    stopAfterDataBatch(q)
 
     // every emitted session (closed or open) must agree with the batch op
     val streamed = spark.table("sess_out")
@@ -508,7 +518,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.outputMode("append").format("memory").queryName("sess_rocks")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      try q.awaitTermination(120000) finally q.stop()
+      stopAfterDataBatch(q)
       val streamed = spark.table("sess_rocks")
         .select("user_id", "session_idx", "n_events", "start_sec", "end_sec")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
@@ -1722,6 +1732,62 @@ class StreamingSpec extends AnyFunSuite {
     val diff2 = Monitor.logDiff(spark, path, 1L, 2L).collect()
       .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSet
     assert(diff2 === Set((None, 9L, 1L)))
+  }
+
+  test("an empty micro-batch keeps its log entry: as-of and diff read across it") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_emptybatch").toString
+    val path = s"$dir/log"
+    val in = MemoryStream[Long]
+    // batch 1 holds only a row the filter drops, so its partial is empty
+    val q = Monitor.captureExactlyOnce(in.toDF().filter(col("value") =!= 0L), path,
+      s"$dir/ckpt", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    try Seq(Seq(1L, 2L), Seq(0L), Seq(3L)).foreach { rows =>
+      in.addData(rows: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    def asOf(b: Long) = Monitor.readLogAsOf(spark, path, b)
+      .collect().map(_.getLong(0)).toSet
+    assert(asOf(1L) === Set(1L, 2L))
+    assert(asOf(2L) === Set(1L, 2L, 3L))
+    assert(Monitor.readLog(spark, path).count() === 3L)
+    val diff = Monitor.logDiff(spark, path, 0L, 2L).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(diff === Set((3L, 1L)))
+    assert(Monitor.logDiff(spark, path, 0L, 1L).count() === 0L)
+  }
+
+  test("compacting a cell index whose newest batch is empty keeps cell=") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("graft_cellempty").toString
+    val path = s"$dir/idx"
+    val cents = Array(Array(1000L, 0L), Array(0L, 1000L))
+    def emb(id: Long, x: Float, y: Float) = EmbDoc(id, new Timestamp(0L), Array(x, y))
+    val in = MemoryStream[EmbDoc]
+    // batch 2 holds only vec_id 0, which the filter drops
+    val q = Monitor.maintainCellIndex(in.toDF().drop("ts").filter(col("vec_id") > 0L),
+      cents, path, s"$dir/ckpt", dims = 2,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    try Seq(Seq(emb(1L, 1f, 0f), emb(2L, 0f, 1f)), Seq(emb(3L, 1f, 0.1f)),
+        Seq(emb(0L, 1f, 1f))).foreach { rows =>
+      in.addData(rows: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    def parts() = fs.listStatus(new Path(path)).map(_.getPath.getName)
+      .filter(_.startsWith("__batch_id=")).map(_.stripPrefix("__batch_id=").toLong).toSet
+    def cells() = Monitor.readLog(spark, path).select("vec_id", "cell").collect()
+      .map(r => (r.getLong(0), r.getAs[Number](1).longValue)).toSet
+    val before = cells()
+    assert(before === Set((1L, 0L), (2L, 1L), (3L, 0L)))
+    Monitor.compactLog(spark, path)
+    assert(parts() === Set(-2L, 2L), s"got ${parts()}")
+    assert(cells() === before)
+    assert(fs.listStatus(new Path(path, "__batch_id=-2")).map(_.getPath.getName)
+      .exists(_.startsWith("cell=")), "compacted generation must keep cell= subdirectories")
   }
 
   test("ingest-door novelty against the gram index equals batch verdicts") {
