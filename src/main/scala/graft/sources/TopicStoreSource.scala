@@ -4,7 +4,8 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -59,6 +60,18 @@ object TopicStoreSource {
     require(all.nonEmpty, "topicstore source requires a path: .load(dir)")
     all
   }
+
+  /** Every `.topic_store` log under `paths`, in path order: a missing
+    * path lists nothing, a path that is itself a log lists itself. The
+    * status's path string is the log's key in offsets and in the `file`
+    * column.
+    */
+  private[graft] def listLogs(conf: Configuration, paths: Seq[String]): Seq[FileStatus] =
+    paths.flatMap { p =>
+      val root = new Path(p)
+      FileWalk.files(root.getFileSystem(conf), root)
+        .filter(_.getPath.getName.endsWith(".topic_store"))
+    }
 }
 
 class TopicStoreTable(paths: Seq[String]) extends Table with SupportsRead {
@@ -114,33 +127,19 @@ class TopicStoreScan(paths: Seq[String], required: StructType,
     * be broadcast instead of shuffled.
     */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val bytes = planInputPartitions()
-      .map(_.asInstanceOf[TopicStoreInputPartition].length).sum
+    private val bytes = partitions.map(_.asInstanceOf[TopicStoreInputPartition].length).sum
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    paths.flatMap { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) Seq.empty
-      else {
-        val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-        val it = fs.listFiles(root, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val p = f.getPath.toString
-          if (f.isFile && f.getPath.getName.endsWith(".topic_store") &&
-              filePredicates.forall(_(p)))
-            out += TopicStoreInputPartition(p, f.getLen)
-        }
-        out.toSeq
-      }
-    }.toArray
-  }
+  /** Listed once per scan: Spark asks for statistics and then plans. */
+  private lazy val partitions: Array[InputPartition] =
+    TopicStoreSource.listLogs(SparkSession.active.sparkContext.hadoopConfiguration, paths)
+      .collect { case f if filePredicates.forall(_(f.getPath.toString)) =>
+        TopicStoreInputPartition(f.getPath.toString, f.getLen): InputPartition
+      }.toArray
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TopicStoreReaderFactory(required,
@@ -177,33 +176,18 @@ object TopicStoreOffset {
   * `.topic_store` files; a batch is the files that appeared since the
   * previous offset (whole files — the file is the split unit in this
   * format). This is the "capture → storage" live path run with the same
-  * decoder as the batch scan. At 10^5-file scale the offset map is the
-  * frontier; production deployments should compact ingested files away
-  * (see Layout.compact) or partition capture dirs by date.
+  * decoder as the batch scan. A poll costs one `listStatus` per directory
+  * under the watched paths and forks no process ([[FileWalk]]); Spark
+  * polls on every trigger. The offset map is the frontier, bounded by
+  * `maxFileAgeMs`; the listing is not, so at 10^5-file scale ingested
+  * logs should be moved out of the watched directory, or capture
+  * directories partitioned by date.
   */
 class TopicStoreMicroBatchStream(paths: Seq[String], required: StructType,
                                  maxFileAgeMs: Long = 7L * 24 * 3600 * 1000)
     extends MicroBatchStream {
   private val conf = SparkSession.active.sparkContext.hadoopConfiguration
   private val serConf = new SerializableHadoopConf(conf)
-
-  /** (path, length, modTime) of every current log file. */
-  private def listNow(): Seq[(String, Long, Long)] =
-    paths.flatMap { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) Seq.empty
-      else {
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-        val it = fs.listFiles(root, true)
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.isFile && f.getPath.getName.endsWith(".topic_store"))
-            out += ((f.getPath.toString, f.getLen, f.getModificationTime))
-        }
-        out.toSeq
-      }
-    }
 
   override def initialOffset(): Offset = TopicStoreOffset(Map.empty)
 
@@ -216,10 +200,12 @@ class TopicStoreMicroBatchStream(paths: Seq[String], required: StructType,
     * deployment, not O(all files ever).
     */
   override def latestOffset(): Offset = {
-    val now = listNow()
-    val newest = if (now.isEmpty) 0L else now.map(_._3).max
+    val now = TopicStoreSource.listLogs(conf, paths)
+    val newest = if (now.isEmpty) 0L else now.map(_.getModificationTime).max
     val horizon = newest - maxFileAgeMs
-    TopicStoreOffset(now.collect { case (p, len, mt) if mt >= horizon => p -> len }.toMap)
+    TopicStoreOffset(now.collect {
+      case f if f.getModificationTime >= horizon => f.getPath.toString -> f.getLen
+    }.toMap)
   }
 
   override def deserializeOffset(json: String): Offset = TopicStoreOffset.fromJson(json)

@@ -15,6 +15,8 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotatio
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
+import graft.sources.FileWalk
+
 /** Serializable carrier for the session's Hadoop configuration.
   *
   * Executor-side metadata reads (parquet footers below) must see the SAME
@@ -154,17 +156,7 @@ object FooterStats {
     */
   def listDataFiles(spark: SparkSession, path: String): Seq[String] = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
-    def walk(dir: Path): Seq[String] = fs.listStatus(dir).toSeq.flatMap { s =>
-      if (hidden(s.getPath.getName)) Nil
-      else if (s.isDirectory) walk(s.getPath)
-      else Seq(s.getPath.toString)
-    }
-    if (!fs.exists(root)) Seq.empty
-    else {
-      val top = fs.getFileStatus(root)
-      if (top.isFile) Seq(top.getPath.toString) else walk(root)
-    }
+    FileWalk.dataFiles(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+      .map(_.getPath.toString)
   }
 }

@@ -3,6 +3,8 @@ package graft.store
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.FileWalk
+
 /** Physical layout strategies for the 100 TB deployment (SURVEY.md §5).
   *
   * - Bucketed tables: co-partition fact tables on the join key at write
@@ -204,21 +206,20 @@ object Layout {
     * delete leaves temporary duplicates (re-running the job converges) —
     * the same non-transactional contract as Hive compaction. Files already
     * at-or-above half the target are left untouched: no rewrite churn on a
-    * healthy table.
+    * healthy table. `_`/`.` directories are not entered, as Spark's reader
+    * skips them. A streaming file-sink store (a `Monitor.capture` store,
+    * whose `_spark_metadata` log lists the files a read may see) is refused
+    * with an `IllegalArgumentException` before any file is touched.
     */
   def compact(spark: SparkSession, path: String, targetBytes: Long = 128L << 20): CompactStats = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return CompactStats(0, 0, 0, 0L)
-    val small = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && !name.startsWith("_") && !name.startsWith(".") &&
-          f.getLen < targetBytes / 2)
-        small += ((f.getPath.getParent.toString, f.getPath.toString, f.getLen))
-    }
+    val sinkLog = new org.apache.hadoop.fs.Path(root, "_spark_metadata")
+    require(!fs.exists(sinkLog),
+      s"$path is a streaming file-sink store: its log $sinkLog names every data file, " +
+        "so compacting them would leave the log naming deleted files")
+    val small = FileWalk.dataFiles(fs, root).filter(_.getLen < targetBytes / 2)
+      .map(f => (f.getPath.getParent.toString, f.getPath.toString, f.getLen))
     // a lone small file per directory is already as compact as it gets
     val groups = small.groupBy(_._1).filter(_._2.size > 1)
     var filesOut = 0

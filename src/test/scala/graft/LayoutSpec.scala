@@ -2,10 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.api.Graft
 import graft.store.Layout
+import graft.streaming.Monitor
 
 /** Physical-layout checks: bucketed joins avoid shuffles, partitioned
   * writes prune, salted joins preserve results while spreading hot keys.
@@ -148,6 +151,52 @@ class LayoutSpec extends AnyFunSuite {
     // idempotent: a second run finds nothing to do
     val again = Layout.compact(spark, out, targetBytes = 512L << 20)
     assert(again.filesIn === 0 && again.filesOut === 0)
+  }
+
+  /** A `Monitor.capture` store of `batches` micro-batches, each writing
+    * two files into each of two session directories.
+    */
+  private def captureStore(batches: Int): String = {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_compact_sink").toString
+    val input = MemoryStream[(Long, Long)]
+    (0 until batches).foreach { b =>
+      // two blocks are two input partitions: one file per block per session
+      input.addData((0 until 4).map(i => (b * 100L + i, i % 2L)))
+      input.addData((4 until 8).map(i => (b * 100L + i, i % 2L)))
+      Monitor.capture(input.toDF(), col("_1"), col("_2"), col("_1"),
+        s"$root/store", s"$root/chk").awaitTermination()
+    }
+    s"$root/store"
+  }
+
+  private def refusesCaptureStore(batches: Int): Unit = {
+    val store = captureStore(batches)
+    def allFiles(): Set[(String, Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(java.nio.file.Paths.get(store))
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => (f.toString, Files.size(f), Files.getLastModifiedTime(f).toMillis)).toSet
+      finally walk.close()
+    }
+    val before = allFiles()
+    assert(before.count(f => f._1.contains("session=0") && f._1.endsWith(".parquet")) === 2 * batches)
+    assert(before.count(_._1.contains("_spark_metadata")) >= batches)
+    assert(Graft.load(spark, store).count() === 8 * batches)
+    val e = intercept[IllegalArgumentException](Layout.compact(spark, store, targetBytes = 512L << 20))
+    assert(e.getMessage.contains("_spark_metadata"))
+    assert(allFiles() === before)
+    assert(Graft.load(spark, store).count() === 8 * batches)
+    assert(spark.read.parquet(store).count() === 8 * batches)
+  }
+
+  test("compact refuses a one-batch capture store, whose sink log would name deleted files") {
+    refusesCaptureStore(1)
+  }
+
+  test("compact refuses a three-batch capture store before touching a file") {
+    refusesCaptureStore(3)
   }
 
   test("bloom-filter write: footers carry filters that answer membership") {

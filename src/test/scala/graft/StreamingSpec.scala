@@ -47,6 +47,50 @@ class StreamingSpec extends AnyFunSuite {
     assert(parts.length === 1)
   }
 
+  test("topicstore listing equals fs.listFiles: two depths, sidecars, a file root, listed once per scan") {
+    spark.range(1).count()
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fixture = new java.io.File(getClass.getResource("/sample.topic_store").toURI).toPath
+    val dir = Files.createTempDirectory("graft_tswalk")
+    Files.createDirectories(dir.resolve("s1/s2"))
+    Files.createDirectories(dir.resolve("empty"))
+    Seq("a.topic_store", "s1/b.topic_store", "s1/s2/c.topic_store")
+      .foreach(rel => Files.copy(fixture, dir.resolve(rel)))
+    Files.write(dir.resolve("s1/notes.txt"), "not a log".getBytes)
+    Files.write(dir.resolve(".a.topic_store.crc"), Array[Byte](1, 2))
+    Files.write(dir.resolve("s1/s2/.c.topic_store.crc"), Array[Byte](1, 2))
+
+    def triples(fs: Iterable[org.apache.hadoop.fs.FileStatus]) =
+      fs.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    def listed(root: String) = {
+      val p = new Path(root)
+      val fs = p.getFileSystem(conf)
+      val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
+      if (fs.exists(p)) {
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) {
+          val f = it.next()
+          if (f.isFile && f.getPath.getName.endsWith(".topic_store")) out += f
+        }
+      }
+      triples(out)
+    }
+    val roots = Seq(dir.toString, s"file:$dir", s"$dir/s1", s"$dir/s1/s2/c.topic_store",
+      s"$dir/empty", s"$dir/missing")
+    roots.foreach { root =>
+      val walked = graft.sources.TopicStoreSource.listLogs(conf, Seq(root))
+      assert(triples(walked) === listed(root), root)
+      assert(walked.size === triples(walked).size, root)
+    }
+    assert(listed(dir.toString).size === 3)
+
+    val scan = new graft.sources.TopicStoreScan(Seq(dir.toString), graft.sources.TopicStoreSource.Schema)
+    assert(scan.estimateStatistics().sizeInBytes().getAsLong === 3 * Files.size(fixture))
+    assert(scan.planInputPartitions() eq scan.planInputPartitions(),
+      "statistics and planning share one listing")
+  }
+
   test("captureToTopicStore lands micro-batches as native logs, replay-safe") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_tscap").toString
