@@ -47,19 +47,97 @@ object Graph {
     (ck.toDF(df.columns: _*), acc.value)
   }
 
+  /** Row budget of every measured broadcast in this object, in
+    * single-long rows (~32 MB of keys).
+    */
+  private val BroadcastRows = 4000000L
+
+  /** The broadcast gate: may a side measured at `rows` rows, each
+    * costing `weight` budget rows (its width in longs, or the rows it
+    * fans out to), be broadcast? No once it passes [[BroadcastRows]] —
+    * the caller then takes its shuffle join, the 100 TB path — and no
+    * when the session has broadcasting off (a negative
+    * `spark.sql.autoBroadcastJoinThreshold`, Spark's documented switch:
+    * read here, never written). Counts come from [[checkpointCounted]]
+    * and may over-count, which only demotes to the shuffle side.
+    */
+  private def fitsBroadcast(spark: SparkSession, rows: Long,
+                            weight: Long = 1L): Boolean =
+    rows <= BroadcastRows / weight &&
+      spark.sessionState.conf.autoBroadcastJoinThreshold >= 0
+
+  /** The canonical undirected edge list: one (a < b) row per distinct
+    * edge, self-loops dropped. ONE spelling on purpose — CacheManager
+    * matches cached plans by analyzed plan, so [[triangles]],
+    * [[kCore]], [[kTruss]], [[bfs]], [[modularity]] and
+    * [[assortativity]] over the same pairs share one materialization
+    * only while they build this frame identically. `cache` shares it
+    * through [[OpCache]] (releasable via Dedup.unpersistShared()).
+    */
+  private[graft] def canonicalEdges(pairs: DataFrame, cache: Boolean): DataFrame =
+    OpCache.share(
+      pairs.select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .filter(col("a") =!= col("b")).distinct(),
+      cache)
+
+  /** Both directions (u, v) of every canonical edge, hash-partitioned on
+    * `u` and checkpointed with that partitioning kept — the spine that
+    * makes every round's join and groupBy on `u` exchange-free.
+    */
+  private def partitionedAdjacency(e: DataFrame): DataFrame =
+    e.select(explode(array(
+        struct(col("a").as("u"), col("b").as("v")),
+        struct(col("b").as("u"), col("a").as("v")))).as("x"))
+      .select(col("x.u").as("u"), col("x.v").as("v"))
+      .repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("u"))
+      .transform(OpCache.ckptPartitioned)
+
+  /** Both directions (a, b) of every (src, dst) pair, spelled as one
+    * explode (never a swapped-alias self-union, which scans twice).
+    */
+  private def bothDirections(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(
+        struct(col("src").as("a"), col("dst").as("b")),
+        struct(col("dst").as("a"), col("src").as("b")))).as("e"))
+      .select(col("e.a").as("a"), col("e.b").as("b"))
+
+  /** [[bothDirections]] with the source's degree on every row,
+    * hash-partitioned on `a` and checkpointed once — the edge spine of
+    * [[pageRank]] and [[personalizedPageRank]].
+    */
+  private def degreeEdges(pairs: DataFrame): DataFrame = {
+    val n = pairs.sparkSession.sessionState.conf.numShufflePartitions
+    val edges = bothDirections(pairs)
+    val deg = edges.groupBy(col("a")).agg(count(lit(1)).as("deg"))
+    OpCache.ckptPartitioned(edges.join(deg, "a").repartition(n, col("a")))
+  }
+
+  /** The trading-node codec: customer k ↦ 2k, supplier k ↦ 2k+1, so
+    * every iteration hashes 8-byte keys; [[tradingLabel]] decodes a
+    * node back to "c<k>" / "s<k>" in the final O(V) projection.
+    */
+  private def customerNode(key: Column): Column = key * 2L
+  private def supplierNode(key: Column): Column = key * 2L + 1L
+  private def tradingLabel(name: String): Column =
+    when(col(name) % 2L === 0L,
+      concat(lit("c"), expr(s"$name div 2").cast("string")))
+      .otherwise(concat(lit("s"), expr(s"$name div 2").cast("string")))
+
   /** The customer–supplier trading graph induced by order lines — the
     * shared fixture of every transaction* query: one edge per distinct
-    * trading relationship, nodes packed as longs (customer 2k,
-    * supplier 2k+1) so every iteration hashes 8-byte keys. ONE
-    * definition — the node-encoding convention lives here and nowhere
-    * else, so the eight consumers and their oracles cannot diverge.
+    * trading relationship (per distinct (src, dst, `keep`…) row when
+    * line columns are kept), nodes in the trading-node codec above —
+    * the only place the encoding is spelled, so the consumers and their
+    * oracles cannot diverge.
     */
-  private def tradingPairs(spark: SparkSession, dir: String): DataFrame =
+  private def tradingPairs(spark: SparkSession, dir: String,
+                           keep: Column*): DataFrame =
     Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
       .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2L).as("src"),
-        (col("l_suppkey") * 2L + 1L).as("dst"))
+      .select(Seq(customerNode(col("o_custkey")).as("src"),
+        supplierNode(col("l_suppkey")).as("dst")) ++ keep: _*)
       .distinct()
 
   /** Undirected PageRank, `iters` synchronous rounds from a uniform
@@ -84,13 +162,7 @@ object Graph {
   def pageRank(pairs: DataFrame, iters: Int = 3,
                scale: Long = 1000000000L, dampPermille: Long = 850L): DataFrame = {
     require(iters >= 1 && dampPermille > 0 && dampPermille < 1000)
-    val n = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val edges = pairs.select(explode(array(
-        struct(col("src").as("a"), col("dst").as("b")),
-        struct(col("dst").as("a"), col("src").as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-    val deg = edges.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-    val ed = OpCache.ckptPartitioned(edges.join(deg, "a").repartition(n, col("a")))
+    val ed = degreeEdges(pairs)
     val base = scale * (1000L - dampPermille) / 1000L
     var pr = ed.select(col("a").as("node")).distinct()
       .withColumn("pr", lit(scale))
@@ -152,11 +224,7 @@ object Graph {
     // reuse can't cover them, so an uncached `e` would re-run the
     // upstream pair expansion each time. Shared-cache like every dedup
     // intermediate; releasable via Dedup.unpersistShared().
-    val e = OpCache.share(
-      pairs.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct(),
-      cache)
+    val e = canonicalEdges(pairs, cache)
     val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val fwd = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
@@ -283,25 +351,15 @@ object Graph {
     * `maxIter` and fail loudly rather than silently return a non-core).
     */
   def kCore(pairs: DataFrame, k: Int, maxIter: Int = 50,
-            broadcastRemovals: Long = 4000000L, cache: Boolean = true): DataFrame = {
+            cache: Boolean = true): DataFrame = {
     require(k >= 1)
-    val n = pairs.sparkSession.sessionState.conf.numShufflePartitions
+    val spark = pairs.sparkSession
+    val n = spark.sessionState.conf.numShufflePartitions
     // The canonical edge list is the expensive input (a pair-expansion
     // join upstream dwarfs the peeling itself — profiled 8s build vs 2s
-    // of peeling on the co-purchase graph); cache-share it so (a) a
-    // repeated run reuses it and (b) its analyzed plan is IDENTICAL to
-    // [[triangles]]'s `e`, letting CacheManager serve both operators
-    // from one materialization. Releasable via Dedup.unpersistShared().
-    val e = OpCache.share(
-      pairs.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct(),
-      cache)
-    var adj = e.select(explode(array(
-        struct(col("a").as("u"), col("b").as("v")),
-        struct(col("b").as("u"), col("a").as("v")))).as("x"))
-      .select(col("x.u").as("u"), col("x.v").as("v"))
-      .repartition(n, col("u")).transform(OpCache.ckptPartitioned)
+    // of peeling on the co-purchase graph); cache-share it so a repeated
+    // run, and [[triangles]] over the same pairs, reuse it.
+    var adj = partitionedAdjacency(canonicalEdges(pairs, cache))
     // Peeling driven by the REMOVED-node set, not the surviving edge
     // list: per round, the degree groupBy is exchange-free (adj is
     // hash-partitioned on `u` and every round preserves that), the
@@ -311,8 +369,8 @@ object Graph {
     // removed set fits the broadcast budget (always, after the first
     // round or two — peeling has a long small-round tail) both
     // keep-filters are broadcast anti-joins: zero exchange for the whole
-    // round. A bulk round (more removals than `broadcastRemovals`) falls
-    // back to the shuffle anti-join on `v` — the 100 TB-safe path where
+    // round. A bulk round (one [[fitsBroadcast]] refuses) falls back
+    // to the shuffle anti-join on `v` — the 100 TB-safe path where
     // a billion-node round-1 cull can't be broadcast — and re-partitions
     // to restore the `u` hashing the next round's groupBy relies on.
     var converged = false
@@ -324,7 +382,7 @@ object Graph {
       if (nRemoved == 0L) converged = true
       else {
         val next =
-          if (nRemoved <= broadcastRemovals)
+          if (fitsBroadcast(spark, nRemoved))
             adj.join(broadcast(removed), Seq("u"), "left_anti")
               .join(broadcast(removed.withColumnRenamed("u", "v")), Seq("v"), "left_anti")
           else
@@ -344,14 +402,8 @@ object Graph {
     * the edge construction): the stable dense subgraph of parts that
     * keep being bought together.
     */
-  def partKCore(spark: SparkSession, dir: String, k: Int = 65): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-    kCore(
-      li.as("x").join(li.as("y"),
-          col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-        .select(col("x.pk").as("src"), col("y.pk").as("dst")), k)
-  }
+  def partKCore(spark: SparkSession, dir: String, k: Int = 65): DataFrame =
+    kCore(coPurchasePairs(spark, dir), k)
 
   /** k-truss decomposition by iterative edge peeling — the EDGE-cohesion
     * sibling of [[kCore]] (a k-core survives on raw degree; a k-truss
@@ -380,13 +432,7 @@ object Graph {
              cache: Boolean = true): DataFrame = {
     require(k >= 3)
     graft.functions.SortedArrayFunctions.register(pairs.sparkSession)
-    // same canonical-edge plan as [[triangles]]/[[kCore]] — CacheManager
-    // serves all three from one materialization
-    val e0 = OpCache.share(
-      pairs.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct(),
-      cache)
+    val e0 = canonicalEdges(pairs, cache)
     def supportOf(cur: DataFrame): DataFrame = {
       val deg = cur.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -474,28 +520,18 @@ object Graph {
     * Scale shape per round (the kCore playbook): the adjacency is
     * hash-partitioned on `u` and checkpointed ONCE, so every round's
     * frontier join is exchange-free on the big side; the frontier and
-    * visited sets are frontier-sized, broadcast into the join and the
-    * anti-join while they fit (`broadcastNodes`), shuffle anti-join past
-    * that — the 100 TB path where a billion-node frontier can't
-    * broadcast. Rounds = eccentricity of the source set (bounded by
-    * `maxDepth`, loud failure beyond), each O(frontier-edges) work —
-    * never corpus-quadratic, never a driver-side traversal.
+    * the visited set are each broadcast into their join while their
+    * measured size fits ([[fitsBroadcast]]), shuffled past that — the
+    * 100 TB path where a billion-node frontier can't broadcast. Rounds =
+    * eccentricity of the source set (bounded by `maxDepth`, loud
+    * failure beyond), each O(frontier-edges) work — never
+    * corpus-quadratic, never a driver-side traversal.
     */
   def bfs(pairs: DataFrame, sources: Seq[Long], maxDepth: Int = 30,
-          broadcastNodes: Long = 4000000L, cache: Boolean = true): DataFrame = {
+          cache: Boolean = true): DataFrame = {
     require(sources.nonEmpty)
     val spark = pairs.sparkSession
-    val n = spark.sessionState.conf.numShufflePartitions
-    val e = OpCache.share(
-      pairs.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct(),
-      cache)
-    val adj = e.select(explode(array(
-        struct(col("a").as("u"), col("b").as("v")),
-        struct(col("b").as("u"), col("a").as("v")))).as("x"))
-      .select(col("x.u").as("u"), col("x.v").as("v"))
-      .repartition(n, col("u")).transform(OpCache.ckptPartitioned)
+    val adj = partitionedAdjacency(canonicalEdges(pairs, cache))
     import spark.implicits._
     var visited = sources.distinct.sorted.toDF("node")
       .select(col("node").cast("long").as("node"), lit(0).as("depth"))
@@ -503,19 +539,23 @@ object Graph {
     var frontier = visited.select(col("node"))
     var depth = 0
     var frontierSize = sources.size.toLong
+    // visited = the distinct sources + every measured frontier (each
+    // frontier is distinct and disjoint from what was visited before)
+    var visitedSize = sources.distinct.size.toLong
     while (frontierSize > 0L && depth < maxDepth) {
       depth += 1
-      val small = frontierSize <= broadcastNodes
-      val f = if (small) broadcast(frontier) else frontier
+      val f = if (fitsBroadcast(spark, frontierSize)) broadcast(frontier) else frontier
       val reached = adj.join(f.withColumnRenamed("node", "u"), Seq("u"))
         .select(col("v").as("node")).distinct()
-      val next =
-        if (small) reached.join(broadcast(visited.select(col("node"))), Seq("node"), "left_anti")
-        else reached.join(visited.select(col("node")), Seq("node"), "left_anti")
+      val seen = visited.select(col("node"))
+      val next = reached.join(
+        if (fitsBroadcast(spark, visitedSize)) broadcast(seen) else seen,
+        Seq("node"), "left_anti")
       val (f2, size2) = checkpointCounted(next)
       frontier = f2
       frontierSize = size2
       if (frontierSize > 0L) {
+        visitedSize += frontierSize
         visited = visited
           .unionByName(frontier.select(col("node"), lit(depth).as("depth")))
         // the union's leaves are all checkpointed frontiers, so lineage
@@ -532,15 +572,8 @@ object Graph {
     * (see [[partTriangles]] for the edge construction): hop-distance
     * strata of the "bought-together" neighborhood.
     */
-  def partBfs(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-    bfs(
-      li.as("x").join(li.as("y"),
-          col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-        .select(col("x.pk").as("src"), col("y.pk").as("dst")),
-      sources = Seq(0L))
-  }
+  def partBfs(spark: SparkSession, dir: String): DataFrame =
+    bfs(coPurchasePairs(spark, dir), sources = Seq(0L))
 
   /** Synchronous label propagation — `rounds` deterministic LPA sweeps:
     * every node starts as its own label, and each round adopts the label
@@ -562,11 +595,7 @@ object Graph {
   def labelPropagation(pairs: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1)
     val n = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val edges = pairs.select(explode(array(
-        struct(col("src").as("a"), col("dst").as("b")),
-        struct(col("dst").as("a"), col("src").as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-    val ed = OpCache.ckptPartitioned(edges.repartition(n, col("a")))
+    val ed = OpCache.ckptPartitioned(bothDirections(pairs).repartition(n, col("a")))
     var lab = ed.select(col("a").as("node")).distinct()
       .withColumn("lbl", col("node"))
       .localCheckpoint()
@@ -592,12 +621,8 @@ object Graph {
   def transactionCommunities(spark: SparkSession, dir: String,
                              rounds: Int = 4): DataFrame = {
     val pairs = tradingPairs(spark, dir)
-    def readable(name: String) =
-      when(col(name) % 2L === 0L,
-        concat(lit("c"), expr(s"$name div 2").cast("string")))
-        .otherwise(concat(lit("s"), expr(s"$name div 2").cast("string")))
     labelPropagation(pairs, rounds)
-      .select(readable("node").as("node"), readable("lbl").as("label"))
+      .select(tradingLabel("node").as("node"), tradingLabel("lbl").as("label"))
       .orderBy("node")
   }
 
@@ -625,13 +650,7 @@ object Graph {
       dampPermille > 0 && dampPermille < 1000)
     val spark = pairs.sparkSession
     import spark.implicits._
-    val n = spark.sessionState.conf.numShufflePartitions
-    val edges = pairs.select(explode(array(
-        struct(col("src").as("a"), col("dst").as("b")),
-        struct(col("dst").as("a"), col("src").as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-    val deg = edges.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-    val ed = OpCache.ckptPartitioned(edges.join(deg, "a").repartition(n, col("a")))
+    val ed = degreeEdges(pairs)
     val base = scale * (1000L - dampPermille) / 1000L
     val srcBase = sources.toDF("node").withColumn("c", lit(base))
     var pr = sources.toDF("node").withColumn("pr", lit(scale))
@@ -654,12 +673,7 @@ object Graph {
                      iters: Int = 3): DataFrame = {
     val pairs = tradingPairs(spark, dir)
     personalizedPageRank(pairs, Seq(2L), iters)
-      .select(
-        when(col("node") % 2L === 0L,
-          concat(lit("c"), expr("node div 2").cast("string")))
-          .otherwise(concat(lit("s"), expr("node div 2").cast("string")))
-          .as("node"),
-        col("pr"))
+      .select(tradingLabel("node").as("node"), col("pr"))
       .orderBy(col("pr").desc, col("node"))
   }
 
@@ -709,21 +723,12 @@ object Graph {
     */
   def transactionDistances(spark: SparkSession, dir: String,
                            iters: Int = 3): DataFrame = {
-    val wpairs = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-      .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2L).as("src"),
-        (col("l_suppkey") * 2L + 1L).as("dst"), col("l_orderkey"))
-      .distinct()
+    val wpairs = tradingPairs(spark, dir, col("l_orderkey"))
       .groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("src"), col("dst"), expr("1000000L div cnt").as("w"))
-    def readable(name: String) =
-      when(col(name) % 2L === 0L,
-        concat(lit("c"), expr(s"$name div 2").cast("string")))
-        .otherwise(concat(lit("s"), expr(s"$name div 2").cast("string")))
     minPlusDistances(wpairs, Seq(2L), iters)
-      .select(readable("node").as("node"), col("dist"))
+      .select(tradingLabel("node").as("node"), col("dist"))
       .orderBy(col("dist"), col("node"))
   }
 
@@ -751,9 +756,7 @@ object Graph {
   def linkPrediction(pairs: DataFrame, maxDeg: Int = 256,
                      minCommon: Long = 2L): DataFrame = {
     require(maxDeg >= 2 && minCommon >= 1)
-    val canon = pairs.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val canon = canonicalEdges(pairs, cache = false)
     val adj = canon.select(explode(array(
         struct(col("a").as("z"), col("b").as("n")),
         struct(col("b").as("z"), col("a").as("n")))).as("e"))
@@ -777,18 +780,12 @@ object Graph {
     * "never co-bought, strongly co-neighbored" part pairs.
     */
   def partLinkPrediction(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
     // the co-purchase graph is dense (avg degree ~50 and growing with
     // sf), so the headline query trades the cap down to 64: wedge
     // volume is Σ min(deg, cap)² and the informative centers are the
     // LOW-degree ones anyway — a part co-bought with everything predicts
     // nothing, the hot-shingle argument applied twice as hard
-    linkPrediction(
-      li.as("x").join(li.as("y"),
-          col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-        .select(col("x.pk").as("src"), col("y.pk").as("dst")),
-      maxDeg = 64)
+    linkPrediction(coPurchasePairs(spark, dir), maxDeg = 64)
       .orderBy(col("ra_micro").desc, col("u"), col("v")).limit(100)
   }
 
@@ -820,16 +817,11 @@ object Graph {
     * rows, step 0 = the start node itself.
     */
   def randomWalks(pairs: DataFrame, length: Int = 4,
-                  walksPerNode: Int = 2,
-                  broadcastRows: Long = 4000000L): DataFrame = {
+                  walksPerNode: Int = 2): DataFrame = {
     require(length >= 1 && walksPerNode >= 1)
     import org.apache.spark.sql.expressions.Window
     val n = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val edges = pairs.select(explode(array(
-        struct(col("src").as("a"), col("dst").as("b")),
-        struct(col("dst").as("a"), col("src").as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-    val adj = edges
+    val adj = bothDirections(pairs)
       .withColumn("idx",
         row_number().over(Window.partitionBy(col("a")).orderBy(col("b"))) - 1)
       .repartition(n, col("a")).transform(OpCache.ckptPartitioned)
@@ -846,8 +838,8 @@ object Graph {
     // cost measured at round 16. Past the budget the joins keep the old
     // co-partitioned shuffles — the 100 TB path where a billion walks
     // can't broadcast.
-    val small = nNodes <= broadcastRows &&
-      nNodes * walksPerNode <= broadcastRows
+    // (the walk frontier is the larger side: walksPerNode rows per node)
+    val small = fitsBroadcast(pairs.sparkSession, nNodes, walksPerNode)
     var frontier = deg.select(col("a"))
       .select(explode(sequence(lit(0), lit(walksPerNode - 1))).as("w"), col("a"))
       .select((col("a") * walksPerNode + col("w")).as("walk"), col("a").as("cur"))
@@ -886,13 +878,9 @@ object Graph {
   def transactionWalks(spark: SparkSession, dir: String,
                        length: Int = 4, walksPerNode: Int = 2): DataFrame = {
     val pairs = tradingPairs(spark, dir)
-    def readable(name: String) =
-      when(col(name) % 2L === 0L,
-        concat(lit("c"), expr(s"$name div 2").cast("string")))
-        .otherwise(concat(lit("s"), expr(s"$name div 2").cast("string")))
     randomWalks(pairs, length, walksPerNode)
-      .select(readable("start").as("start"), col("w"), col("step"),
-        readable("node").as("node"))
+      .select(tradingLabel("start").as("start"), col("w"), col("step"),
+        tradingLabel("node").as("node"))
       .orderBy(col("start"), col("w"), col("step"))
   }
 
@@ -903,18 +891,13 @@ object Graph {
     * many lines — the iterative signal a join+count can't produce.
     */
   def transactionRank(spark: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    // Nodes iterate as PACKED LONGS (customer 2k, supplier 2k+1): the
-    // dedup, every per-round join, and the rank groupBy all hash 8-byte
-    // keys instead of strings; the human-readable label is a final O(V)
+    // Nodes iterate as PACKED LONGS (the trading-node codec): the dedup,
+    // every per-round join, and the rank groupBy all hash 8-byte keys
+    // instead of strings; the human-readable label is a final O(V)
     // projection, after the iteration is done.
     val pairs = tradingPairs(spark, dir)
     pageRank(pairs, iters)
-      .select(
-        when(col("node") % 2L === 0L,
-          concat(lit("c"), expr("node div 2").cast("string")))
-          .otherwise(concat(lit("s"), expr("node div 2").cast("string")))
-          .as("node"),
-        col("pr"))
+      .select(tradingLabel("node").as("node"), col("pr"))
       .orderBy(col("pr").desc, col("node"))
   }
 
@@ -933,11 +916,7 @@ object Graph {
     * `communities` needs (node, lbl); `pairs` needs (src, dst).
     */
   def modularity(pairs: DataFrame, communities: DataFrame): DataFrame = {
-    val e = OpCache.share(
-      pairs.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct(),
-      enabled = true)
+    val e = canonicalEdges(pairs, cache = true)
     val m = e.groupBy().agg(count(lit(1)).as("m"))
     val lab = communities.select(col("node"), col("lbl"))
     val internal = e
@@ -974,10 +953,10 @@ object Graph {
   def transactionModularity(spark: SparkSession, dir: String): DataFrame = {
     val pairs = tradingPairs(spark, dir)
     val lab = Tables.customer(spark, dir)
-      .select((col("c_custkey") * 2L).as("node"),
+      .select(customerNode(col("c_custkey")).as("node"),
         col("c_nationkey").cast("long").as("lbl"))
       .unionByName(Tables.supplier(spark, dir)
-        .select((col("s_suppkey") * 2L + 1L).as("node"),
+        .select(supplierNode(col("s_suppkey")).as("node"),
           col("s_nationkey").cast("long").as("lbl")))
     modularity(pairs, lab)
       .select(concat(lit("n"), col("lbl").cast("string")).as("label"),
@@ -1000,11 +979,7 @@ object Graph {
     * joins of the degree table onto the edges + a single global agg.
     */
   def assortativity(pairs: DataFrame): DataFrame = {
-    val e = OpCache.share(
-      pairs.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct(),
-      enabled = true)
+    val e = canonicalEdges(pairs, cache = true)
     val sym = e.select(explode(array(
         struct(col("a").as("u"), col("b").as("v")),
         struct(col("b").as("u"), col("a").as("v")))).as("s"))
@@ -1073,24 +1048,14 @@ object Graph {
     * (level 0 = the sources themselves). Row counts are O(frontier),
     * independent of the sample size — see [[betweenness]]'s scale notes.
     */
-  private def bfsLevelsBatched(pairs: DataFrame, srcs: Seq[Long],
-                               maxDepth: Int, broadcastRows: Long = 4000000L)
+  private def bfsLevelsBatched(pairs: DataFrame, srcs: Seq[Long], maxDepth: Int)
       : (DataFrame, Seq[DataFrame], Seq[Long]) = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val n = spark.sessionState.conf.numShufflePartitions
     val k = srcs.size
-    // broadcast budget in ROWS of (node, k-long array) payloads — the
-    // 4M-single-column default of [[bfs]] scaled down by the row width
-    val bRows = broadcastRows / (k + 1)
-    val e = pairs.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val adj = e.select(explode(array(
-        struct(col("a").as("u"), col("b").as("v")),
-        struct(col("b").as("u"), col("a").as("v")))).as("x"))
-      .select(col("x.u").as("u"), col("x.v").as("v"))
-      .repartition(n, col("u")).transform(OpCache.ckptPartitioned)
+    // broadcast sides are (node, k-long array) rows: k + 1 longs wide
+    def fits(rows: Long) = fitsBroadcast(spark, rows, k + 1)
+    val adj = partitionedAdjacency(canonicalEdges(pairs, cache = false))
     // level0: one row per source node; sig[i] = 1 where this node IS
     // source i. A LocalRelation — checkpointing a k-row table would
     // burn an eager job for nothing, and these queries are
@@ -1130,12 +1095,12 @@ object Graph {
       // then zero the components whose source already visited the node —
       // the element-wise mask IS the per-source anti-join
       val contrib = adj
-        .join(if (frontierSize <= bRows) broadcast(fr) else fr, Seq("u"))
+        .join(if (fits(frontierSize)) broadcast(fr) else fr, Seq("u"))
         .groupBy(col("v").as("node"))
         .agg(array((0 until k).map(i => sum(col("sig")(i))): _*).as("sig"))
       val sn = seen
       val next = contrib
-        .join(if (visited <= bRows) broadcast(sn) else sn, Seq("node"), "left")
+        .join(if (fits(visited)) broadcast(sn) else sn, Seq("node"), "left")
         .select(col("node"), array((0 until k).map(i =>
           when(col("seen").isNull || col("seen")(i) === 0,
             col("sig")(i)).otherwise(0L)): _*).as("sig"))
@@ -1170,8 +1135,6 @@ object Graph {
     val (adj, levels, lvlCounts) = bfsLevelsBatched(pairs, srcs, maxDepth)
     if (levels.size == 1)
       return spark.emptyDataset[(Long, Long)].toDF("node", "bc_micro")
-    // broadcast budget in (node, k-array) rows — bfsLevelsBatched's gate
-    val bRows = 4000000L / (k + 1)
     // the backward sweep joins the adjacency on its OTHER end every
     // level. When every level fits the broadcast budget the level tables
     // broadcast INTO the u-partitioned adjacency (zero edge-list
@@ -1185,7 +1148,8 @@ object Graph {
     var acc: DataFrame = null
     var deltaNext: DataFrame = null // δ of level l+1 (null ⇒ all-zero)
     for (l <- levels.size - 2 to 0 by -1) {
-      val small = lvlCounts(l + 1) <= bRows && lvlCounts(l) <= bRows
+      // level tables are (node, k-array) rows, as in bfsLevelsBatched
+      val small = fitsBroadcast(spark, math.max(lvlCounts(l + 1), lvlCounts(l)), k + 1)
       val down0 = levels(l + 1)
         .select(col("node").as("v"), col("sig").as("sw"))
       val down =
@@ -1264,12 +1228,7 @@ object Graph {
   def transactionBetweenness(spark: SparkSession, dir: String): DataFrame = {
     val pairs = tradingPairs(spark, dir)
     betweenness(pairs, Seq(2L, 4L, 6L, 3L, 5L, 7L))
-      .select(
-        when(col("node") % 2L === 0L,
-          concat(lit("c"), expr("node div 2").cast("string")))
-          .otherwise(concat(lit("s"), expr("node div 2").cast("string")))
-          .as("node"),
-        col("bc_micro"))
+      .select(tradingLabel("node").as("node"), col("bc_micro"))
       .orderBy(col("bc_micro").desc, col("node"))
   }
 
@@ -1371,12 +1330,7 @@ object Graph {
   def transactionHarmonic(spark: SparkSession, dir: String): DataFrame = {
     val pairs = tradingPairs(spark, dir)
     harmonic(pairs, Seq(2L, 4L, 6L, 3L, 5L, 7L))
-      .select(
-        when(col("node") % 2L === 0L,
-          concat(lit("c"), expr("node div 2").cast("string")))
-          .otherwise(concat(lit("s"), expr("node div 2").cast("string")))
-          .as("node"),
-        col("h_micro"))
+      .select(tradingLabel("node").as("node"), col("h_micro"))
       .orderBy(col("h_micro").desc, col("node"))
   }
 }

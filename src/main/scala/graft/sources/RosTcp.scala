@@ -644,6 +644,11 @@ class RosTcpPublisher(port: Int, topic: String,
       registration = None
     }
     try server.close() catch { case _: Exception => () }
+    // the listening socket is released only once the acceptor leaves
+    // accept(): until then the kernel still holds it, and a restart on
+    // the same port fails with "Address already in use" (SO_REUSEADDR
+    // covers TIME_WAIT, not a live listener). Seen on a loaded single CPU.
+    acceptor.join(10000)
     conns.iterator().asScala.foreach(s => try s.close() catch { case _: Exception => () })
     conns.clear()
   }

@@ -345,9 +345,13 @@ class PlanAuditSpec extends AnyFunSuite {
     // at 1000 executors the filtered customer/supplier/part sides exceed
     // any broadcast threshold — force every join to shuffle and assert
     // results are unchanged (the plan the cluster would actually run)
+    // the graph_* keys gate their explicit broadcasts on measured sizes;
+    // with broadcasting off every gate takes its shuffle fallback
     val names = Seq("q3_top_revenue", "q5_region_revenue", "q17_small_qty_revenue",
       "ts_lookup_join", "q9_part_profit", "q16_supplier_variety",
-      "q2_min_cost_supplier", "q20_concentrated_shippers")
+      "q2_min_cost_supplier", "q20_concentrated_shippers",
+      "graph_kcore", "graph_bfs", "graph_walks", "graph_betweenness",
+      "graph_harmonic")
     val before = names.map(n => n ->
       SparkEntry.queries(n)(spark, sf).collect().map(_.toSeq).toSeq).toMap
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -550,6 +554,66 @@ class PlanAuditSpec extends AnyFunSuite {
       val cached = "InMemoryTableScan".r.findAllIn(s).length
       assert(cached >= 2,
         s"expected both tfidf branches to read the cached tf table, saw $cached InMemoryTableScan(s):\n$s")
+    } finally ops.Dedup.unpersistShared()
+  }
+
+  test("ckptPartitioned keeps the hash partitioning and restores AQE exactly") {
+    // the checkpointed spine of every iterative graph op: downstream
+    // groupBys/joins on the key must plan no exchange, and the AQE flag
+    // the helper flips while planning must read back as it was
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions.col
+    val aqe = "spark.sql.adaptive.enabled"
+    val orig = spark.conf.getOption(aqe)
+    val df = spark.range(200).select((col("id") % 13).as("key"), col("id").as("v"))
+    try {
+      for (setting <- Seq(None, Some("true"), Some("FALSE"))) {
+        setting.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+        val before = spark.conf.getOption(aqe) // unset reads the default
+        val ck = ops.OpCache.ckptPartitioned(df.repartition(3, col("key")))
+        assert(spark.conf.getOption(aqe) === before, s"AQE setting $setting not restored")
+        val parts = ck.queryExecution.analyzed.collect {
+          case r: LogicalRDD => r.outputPartitioning
+        }
+        assert(parts.size === 1 && (parts.head match {
+          case HashPartitioning(Seq(a: Attribute), 3) => a.name == "key"
+          case _ => false
+        }), s"AQE $setting: checkpoint partitioning $parts, expected hashpartitioning(key, 3)")
+        val plan = ck.groupBy(col("key")).count().queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"),
+          s"AQE $setting: groupBy on the checkpoint key re-shuffles:\n$plan")
+      }
+    } finally orig.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+  }
+
+  test("graph operators over one pairs frame share one cached canonical edge list") {
+    // triangles, kCore, kTruss, bfs, modularity and assortativity each
+    // cache the canonical edges; CacheManager serves them all from one
+    // materialization only while every operator builds the same plan
+    import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    // K4 + a pendant, with a reversed duplicate and a self-loop
+    val pairs = Seq((1L, 2L), (2L, 1L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L), (4L, 5L), (5L, 5L)).toDF("src", "dst")
+    val lab = Seq((1L, 0L), (2L, 0L), (3L, 1L), (4L, 1L), (5L, 1L)).toDF("node", "lbl")
+    def shared = ops.Graph.canonicalEdges(pairs, cache = false).storageLevel
+    val runs: Seq[(String, () => Unit)] = Seq(
+      "triangles" -> (() => ops.Graph.triangles(pairs).collect()),
+      "kCore" -> (() => ops.Graph.kCore(pairs, 2).collect()),
+      "kTruss" -> (() => ops.Graph.kTruss(pairs, 3).collect()),
+      "bfs" -> (() => ops.Graph.bfs(pairs, Seq(1L)).collect()),
+      "modularity" -> (() => ops.Graph.modularity(pairs, lab).collect()),
+      "assortativity" -> (() => ops.Graph.assortativity(pairs).collect()))
+    try {
+      for ((name, run) <- runs) {
+        ops.Dedup.unpersistShared()
+        assert(shared === StorageLevel.NONE)
+        run()
+        assert(shared !== StorageLevel.NONE,
+          s"$name did not cache the shared canonical edge list")
+      }
     } finally ops.Dedup.unpersistShared()
   }
 }
