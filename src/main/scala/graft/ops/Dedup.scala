@@ -621,9 +621,18 @@ object Dedup {
     * CC: each round is one join + partial-aggregated groupBy; rounds ≤
     * graph diameter (near-dup clusters are tiny, so a handful).
     * `localCheckpoint` truncates lineage each round — without it the plan
-    * doubles per iteration.
+    * doubles per iteration. An edge list inside the driver budget
+    * ([[OpCache.collectLongs]]) runs the same rounds on the driver
+    * ([[LocalGraph.components]]). Either path fails rather than return
+    * labels that have not converged within `maxIter` rounds.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    OpCache.collectLongs(pairs.select(col("id1"), col("id2"))) match {
+      case Right(ids) => LocalGraph.components(pairs.sparkSession, ids, maxIter)
+      case Left(shared) => distributedComponents(shared, maxIter)
+    }
+
+  private def distributedComponents(pairs: DataFrame, maxIter: Int): DataFrame = {
     // Both sides of every per-round join are hash-partitioned on the join
     // key BEFORE their localCheckpoint: LogicalRDD preserves the physical
     // outputPartitioning, so each round's edges⋈labels and labels⋈pushed
@@ -667,6 +676,7 @@ object Dedup {
       labels = next.drop("__changed")
       iter += 1
     }
+    require(converged, s"connected components did not converge within $maxIter rounds")
     labels
   }
 
@@ -696,7 +706,8 @@ object Dedup {
     * Each round materializes O(E) star edges via `localCheckpoint` (same
     * lineage-truncation rationale as the min-label loop) and converges
     * when the edge set is a fixpoint: every edge then points directly at
-    * its component's min vertex.
+    * its component's min vertex. It fails rather than return labels
+    * when that takes more than `maxIter` rounds.
     */
   def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     // Symmetric/vertex expansions use explode(array(...)), NOT a
@@ -764,6 +775,7 @@ object Dedup {
       edges = next
       iter += 1
     }
+    require(converged, s"star connected components did not converge within $maxIter rounds")
     // converged edge set is (child → component-min) stars; roots appear
     // only on the right side and label themselves
     verts.join(edges.select(col("u").as("doc_id"), col("v").as("lbl")),

@@ -47,25 +47,6 @@ object Graph {
     (ck.toDF(df.columns: _*), acc.value)
   }
 
-  /** Row budget of every measured broadcast in this object, in
-    * single-long rows (~32 MB of keys).
-    */
-  private val BroadcastRows = 4000000L
-
-  /** The broadcast gate: may a side measured at `rows` rows, each
-    * costing `weight` budget rows (its width in longs, or the rows it
-    * fans out to), be broadcast? No once it passes [[BroadcastRows]] —
-    * the caller then takes its shuffle join, the 100 TB path — and no
-    * when the session has broadcasting off (a negative
-    * `spark.sql.autoBroadcastJoinThreshold`, Spark's documented switch:
-    * read here, never written). Counts come from [[checkpointCounted]]
-    * and may over-count, which only demotes to the shuffle side.
-    */
-  private def fitsBroadcast(spark: SparkSession, rows: Long,
-                            weight: Long = 1L): Boolean =
-    rows <= BroadcastRows / weight &&
-      spark.sessionState.conf.autoBroadcastJoinThreshold >= 0
-
   /** The canonical undirected edge list: one (a < b) row per distinct
     * edge, self-loops dropped. ONE spelling on purpose — CacheManager
     * matches cached plans by analyzed plan, so [[triangles]],
@@ -157,13 +138,24 @@ object Graph {
     * round) — a cheap global invariant to monitor at 100 TB.
     *
     * `pairs` needs (src, dst) columns; isolated nodes (no edges) are not
-    * ranked.
+    * ranked. A pair list inside the driver budget
+    * ([[OpCache.collectLongs]]) runs the same rounds on the driver
+    * ([[LocalGraph.pageRank]]).
     */
   def pageRank(pairs: DataFrame, iters: Int = 3,
                scale: Long = 1000000000L, dampPermille: Long = 850L): DataFrame = {
     require(iters >= 1 && dampPermille > 0 && dampPermille < 1000)
-    val ed = degreeEdges(pairs)
     val base = scale * (1000L - dampPermille) / 1000L
+    OpCache.collectLongs(pairs.select(col("src"), col("dst"))) match {
+      case Right(ends) =>
+        LocalGraph.pageRank(pairs.sparkSession, ends, iters, scale, base, dampPermille)
+      case Left(shared) => distributedPageRank(shared, iters, scale, base, dampPermille)
+    }
+  }
+
+  private def distributedPageRank(pairs: DataFrame, iters: Int, scale: Long,
+                                  base: Long, dampPermille: Long): DataFrame = {
+    val ed = degreeEdges(pairs)
     var pr = ed.select(col("a").as("node")).distinct()
       .withColumn("pr", lit(scale))
       .localCheckpoint()
@@ -349,17 +341,30 @@ object Graph {
     * computes; lineage resets every round via localCheckpoint. Rounds
     * are data-bounded (a path graph peels O(n) times — cap with
     * `maxIter` and fail loudly rather than silently return a non-core).
+    * A canonical edge list inside the driver budget
+    * ([[OpCache.collectLongs]]) peels in the same rounds on the driver
+    * ([[LocalGraph.kCore]]).
     */
   def kCore(pairs: DataFrame, k: Int, maxIter: Int = 50,
             cache: Boolean = true): DataFrame = {
     require(k >= 1)
-    val spark = pairs.sparkSession
-    val n = spark.sessionState.conf.numShufflePartitions
     // The canonical edge list is the expensive input (a pair-expansion
     // join upstream dwarfs the peeling itself — profiled 8s build vs 2s
     // of peeling on the co-purchase graph); cache-share it so a repeated
     // run, and [[triangles]] over the same pairs, reuse it.
-    var adj = partitionedAdjacency(canonicalEdges(pairs, cache))
+    // rows in node order on both paths; the driver path's local relation
+    // is built sorted, since a Sort over it would plan a range exchange
+    // (three jobs) for rows that are already in order
+    OpCache.collectLongs(canonicalEdges(pairs, cache), cache) match {
+      case Right(ends) => LocalGraph.kCore(pairs.sparkSession, ends, k, maxIter)
+      case Left(e) => distributedKCore(e, k, maxIter).orderBy(col("node"))
+    }
+  }
+
+  private def distributedKCore(e: DataFrame, k: Int, maxIter: Int): DataFrame = {
+    val spark = e.sparkSession
+    val n = spark.sessionState.conf.numShufflePartitions
+    var adj = partitionedAdjacency(e)
     // Peeling driven by the REMOVED-node set, not the surviving edge
     // list: per round, the degree groupBy is exchange-free (adj is
     // hash-partitioned on `u` and every round preserves that), the
@@ -369,7 +374,7 @@ object Graph {
     // removed set fits the broadcast budget (always, after the first
     // round or two — peeling has a long small-round tail) both
     // keep-filters are broadcast anti-joins: zero exchange for the whole
-    // round. A bulk round (one [[fitsBroadcast]] refuses) falls back
+    // round. A bulk round (one [[OpCache.fitsDriver]] refuses) falls back
     // to the shuffle anti-join on `v` — the 100 TB-safe path where
     // a billion-node round-1 cull can't be broadcast — and re-partitions
     // to restore the `u` hashing the next round's groupBy relies on.
@@ -382,7 +387,7 @@ object Graph {
       if (nRemoved == 0L) converged = true
       else {
         val next =
-          if (fitsBroadcast(spark, nRemoved))
+          if (OpCache.fitsDriver(spark, nRemoved))
             adj.join(broadcast(removed), Seq("u"), "left_anti")
               .join(broadcast(removed.withColumnRenamed("u", "v")), Seq("v"), "left_anti")
           else
@@ -395,7 +400,6 @@ object Graph {
     }
     require(converged, s"k-core did not converge within $maxIter rounds")
     adj.groupBy(col("u").as("node")).agg(count(lit(1)).as("core_deg"))
-      .orderBy(col("node"))
   }
 
   /** [[kCore]] of the part co-purchase graph (see [[partTriangles]] for
@@ -521,7 +525,7 @@ object Graph {
     * hash-partitioned on `u` and checkpointed ONCE, so every round's
     * frontier join is exchange-free on the big side; the frontier and
     * the visited set are each broadcast into their join while their
-    * measured size fits ([[fitsBroadcast]]), shuffled past that — the
+    * measured size fits ([[OpCache.fitsDriver]]), shuffled past that — the
     * 100 TB path where a billion-node frontier can't broadcast. Rounds =
     * eccentricity of the source set (bounded by `maxDepth`, loud
     * failure beyond), each O(frontier-edges) work — never
@@ -544,12 +548,12 @@ object Graph {
     var visitedSize = sources.distinct.size.toLong
     while (frontierSize > 0L && depth < maxDepth) {
       depth += 1
-      val f = if (fitsBroadcast(spark, frontierSize)) broadcast(frontier) else frontier
+      val f = if (OpCache.fitsDriver(spark, frontierSize)) broadcast(frontier) else frontier
       val reached = adj.join(f.withColumnRenamed("node", "u"), Seq("u"))
         .select(col("v").as("node")).distinct()
       val seen = visited.select(col("node"))
       val next = reached.join(
-        if (fitsBroadcast(spark, visitedSize)) broadcast(seen) else seen,
+        if (OpCache.fitsDriver(spark, visitedSize)) broadcast(seen) else seen,
         Seq("node"), "left_anti")
       val (f2, size2) = checkpointCounted(next)
       frontier = f2
@@ -839,7 +843,7 @@ object Graph {
     // co-partitioned shuffles — the 100 TB path where a billion walks
     // can't broadcast.
     // (the walk frontier is the larger side: walksPerNode rows per node)
-    val small = fitsBroadcast(pairs.sparkSession, nNodes, walksPerNode)
+    val small = OpCache.fitsDriver(pairs.sparkSession, nNodes, walksPerNode)
     var frontier = deg.select(col("a"))
       .select(explode(sequence(lit(0), lit(walksPerNode - 1))).as("w"), col("a"))
       .select((col("a") * walksPerNode + col("w")).as("walk"), col("a").as("cur"))
@@ -1054,7 +1058,7 @@ object Graph {
     import spark.implicits._
     val k = srcs.size
     // broadcast sides are (node, k-long array) rows: k + 1 longs wide
-    def fits(rows: Long) = fitsBroadcast(spark, rows, k + 1)
+    def fits(rows: Long) = OpCache.fitsDriver(spark, rows, k + 1)
     val adj = partitionedAdjacency(canonicalEdges(pairs, cache = false))
     // level0: one row per source node; sig[i] = 1 where this node IS
     // source i. A LocalRelation — checkpointing a k-row table would
@@ -1149,7 +1153,7 @@ object Graph {
     var deltaNext: DataFrame = null // δ of level l+1 (null ⇒ all-zero)
     for (l <- levels.size - 2 to 0 by -1) {
       // level tables are (node, k-array) rows, as in bfsLevelsBatched
-      val small = fitsBroadcast(spark, math.max(lvlCounts(l + 1), lvlCounts(l)), k + 1)
+      val small = OpCache.fitsDriver(spark, math.max(lvlCounts(l + 1), lvlCounts(l)), k + 1)
       val down0 = levels(l + 1)
         .select(col("node").as("v"), col("sig").as("sw"))
       val down =

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
 /** Shared registry for operator-internal caches, releasable by the
@@ -9,7 +10,8 @@ import org.apache.spark.storage.StorageLevel
   * operator lands here so a pipeline can release them all between
   * stages. Re-caching an already-cached plan is skipped (two queries
   * sharing one subplan re-enter here; re-caching would only log
-  * CacheManager "already cached" warnings).
+  * CacheManager "already cached" warnings). It also holds the one
+  * driver budget ([[fitsDriver]]).
   */
 private[graft] object OpCache {
 
@@ -21,6 +23,66 @@ private[graft] object OpCache {
       handles.synchronized { handles += df }
     }
     df
+  }
+
+  /** Row budget of Graph's measured broadcasts and of the driver-side
+    * graph passes, in single-long rows (~32 MB of keys).
+    */
+  private val DriverRows = 4000000L
+
+  /** A negative `spark.sql.autoBroadcastJoinThreshold` is Spark's
+    * documented "broadcast nothing" switch; it also keeps every graph
+    * pass distributed. Read here, never written.
+    */
+  private def driverOff(spark: SparkSession): Boolean =
+    spark.sessionState.conf.autoBroadcastJoinThreshold < 0
+
+  /** The driver gate: may a side measured at `rows` rows, each costing
+    * `weight` budget rows (its width in longs, or the rows it fans out
+    * to), go to the driver — be broadcast, or processed there? No once
+    * it passes [[DriverRows]] — the caller then takes its shuffle path,
+    * the 100 TB one — and no when the session has broadcasting off.
+    * Measured counts may over-count, which only demotes to the shuffle
+    * side.
+    */
+  def fitsDriver(spark: SparkSession, rows: Long, weight: Long = 1L): Boolean =
+    rows <= DriverRows / weight && !driverOff(spark)
+
+  /** The same gate for a whole frame of longs: its rows packed row-major
+    * into one primitive array (`Right`) when they fit [[DriverRows]] at
+    * one budget row per column and hold no null — read in one job (plus
+    * the stages of `df`'s own shuffles) that stops after budget + 1 rows.
+    * Otherwise `Left` of the frame the caller's distributed path must
+    * read: `df` itself when it never qualified (a non-long column,
+    * broadcasting off), else `df` as the gate read it — shared (`cache`)
+    * or checkpointed — so that path re-reads what the gate computed
+    * instead of re-running `df`'s plan.
+    */
+  def collectLongs(df: DataFrame, cache: Boolean = true): Either[DataFrame, Array[Long]] = {
+    val spark = df.sparkSession
+    val width = df.schema.length
+    if (driverOff(spark) || !df.schema.forall(_.dataType == LongType)) Left(df)
+    else {
+      import spark.implicits._
+      val kept = if (cache) share(df, enabled = true) else df.localCheckpoint()
+      val cap = DriverRows / width
+      val packed = kept.coalesce(1).mapPartitions { rows =>
+        val out = new scala.collection.mutable.ArrayBuilder.ofLong
+        var n = 0L
+        var clean = true
+        while (clean && n <= cap && rows.hasNext) {
+          val r = rows.next()
+          var i = 0
+          while (clean && i < width) {
+            if (r.isNullAt(i)) clean = false else out += r.getLong(i)
+            i += 1
+          }
+          n += 1
+        }
+        if (clean) Iterator.single(out.result()) else Iterator.empty
+      }.collect()
+      packed.headOption.filter(_.length <= cap * width).toRight(kept)
+    }
   }
 
   /** Release every operator-internal cache in this JVM. Safe to call
@@ -58,7 +120,10 @@ private[graft] object OpCache {
   def ckptPartitioned(df: DataFrame): DataFrame = ckptLock.synchronized {
     val spark = df.sparkSession
     val key = "spark.sql.adaptive.enabled"
-    val orig = spark.conf.getOption(key)
+    // `contains`, not `spark.conf.getOption`: the latter reads an unset
+    // key as its registered default, and the restore would then set it
+    val conf = spark.sessionState.conf
+    val orig = if (conf.contains(key)) Some(conf.getConfString(key)) else None
     if (orig.exists(_.equalsIgnoreCase("false"))) df.localCheckpoint()
     else {
       spark.conf.set(key, "false")

@@ -17,6 +17,19 @@ object TestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `f` with broadcasting off — Spark's switch, which also keeps
+    * connected components, PageRank and k-core on their distributed
+    * rounds — and restore the session's setting exactly afterwards.
+    */
+  def distributed[A](f: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val conf = spark.sessionState.conf
+    val prev = if (conf.contains(key)) Some(conf.getConfString(key)) else None
+    spark.conf.set(key, "-1")
+    try f
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 /** Smoke + semantics checks for every SparkEntry query at sf0.001.

@@ -244,8 +244,29 @@ class DataOpsSpec extends AnyFunSuite {
     val graph = hubEdges.unionByName(pathEdges).unionByName(randEdges)
     val stars = Dedup.connectedComponentsStars(graph)
     assert(stars.filter(col("doc_id") <= 500L && col("cluster_id") =!= 0L).count() === 0)
-    val minLabel = Dedup.connectedComponents(graph)
+    // the 101-node path needs 101 min-label rounds (100 hops + the check)
+    val minLabel = Dedup.connectedComponents(graph, maxIter = 120)
     assert(minLabel.filter(col("doc_id") <= 500L && col("cluster_id") =!= 0L).count() === 0)
+    // the distributed rounds plan the explode over the union shape too;
+    // without the path they converge inside the default maxIter
+    val shortGraph = hubEdges.unionByName(randEdges)
+    val minLabelDist = distributed(Dedup.connectedComponents(shortGraph).collect())
+    assert(minLabelDist.count(r => r.getLong(0) <= 500L && r.getLong(1) != 0L) === 0)
+  }
+
+  test("both connected-components paths fail instead of returning unconverged labels") {
+    import spark.implicits._
+    // a 25-node path needs 25 min-label rounds; 20 must not be enough
+    val path = (0L until 24L).map(i => (i, i + 1)).toDF("id1", "id2")
+    for ((name, run) <- Seq[(String, (=> Unit) => Unit)](
+        "driver" -> (f => f), "distributed" -> (f => distributed(f)))) {
+      val e = intercept[IllegalArgumentException](
+        run(Dedup.connectedComponents(path, maxIter = 20).collect()))
+      assert(e.getMessage.contains("did not converge within 20 rounds"), name)
+    }
+    // the star variant's cap fails the same way
+    intercept[IllegalArgumentException](
+      Dedup.connectedComponentsStars(path, maxIter = 1).collect())
   }
 
   test("heavy hitters are exact, never miss above the MG bound, and reject unsafe k") {
@@ -1616,6 +1637,24 @@ class DataOpsSpec extends AnyFunSuite {
     val d1 = ops.Graph.minPlusDistances(chain, Seq(1L), iters = 1)
       .collect().map(_.getLong(0)).toSet
     assert(d1 === Set(1L, 2L))
+  }
+
+  test("pagerank overflow throws on the driver and distributed paths alike") {
+    import spark.implicits._
+    // pr * 850 overflows a long in round 1: ANSI arithmetic must fail, on
+    // the driver-side rounds as in Spark's own multiply
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val big = Long.MaxValue / 100
+    intercept[ArithmeticException](ops.Graph.pageRank(edges, scale = big).collect())
+    intercept[ArithmeticException](distributed(ops.Graph.pageRank(edges, scale = big).collect()))
+    // without ANSI mode both paths wrap, to the same rows
+    val ansi = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(ansi).filter(_ => spark.sessionState.conf.contains(ansi))
+    spark.conf.set(ansi, "false")
+    try {
+      val local = ops.Graph.pageRank(edges, scale = big).collect().map(_.toSeq).toSet
+      assert(local === distributed(ops.Graph.pageRank(edges, scale = big).collect()).map(_.toSeq).toSet)
+    } finally prev.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
   }
 
   test("personalized pagerank matches hand arithmetic, stays source-local") {

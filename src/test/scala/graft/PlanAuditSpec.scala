@@ -346,12 +346,14 @@ class PlanAuditSpec extends AnyFunSuite {
     // any broadcast threshold — force every join to shuffle and assert
     // results are unchanged (the plan the cluster would actually run)
     // the graph_* keys gate their explicit broadcasts on measured sizes;
-    // with broadcasting off every gate takes its shuffle fallback
+    // with broadcasting off every gate takes its shuffle fallback, and
+    // graph_pagerank, graph_kcore and dedup_clusters leave their
+    // driver-side rounds for the distributed ones
     val names = Seq("q3_top_revenue", "q5_region_revenue", "q17_small_qty_revenue",
       "ts_lookup_join", "q9_part_profit", "q16_supplier_variety",
       "q2_min_cost_supplier", "q20_concentrated_shippers",
       "graph_kcore", "graph_bfs", "graph_walks", "graph_betweenness",
-      "graph_harmonic")
+      "graph_harmonic", "graph_pagerank", "dedup_clusters")
     val before = names.map(n => n ->
       SparkEntry.queries(n)(spark, sf).collect().map(_.toSeq).toSeq).toMap
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -572,8 +574,11 @@ class PlanAuditSpec extends AnyFunSuite {
       for (setting <- Seq(None, Some("true"), Some("FALSE"))) {
         setting.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
         val before = spark.conf.getOption(aqe) // unset reads the default
+        val wasSet = spark.sessionState.conf.contains(aqe)
         val ck = ops.OpCache.ckptPartitioned(df.repartition(3, col("key")))
         assert(spark.conf.getOption(aqe) === before, s"AQE setting $setting not restored")
+        assert(spark.sessionState.conf.contains(aqe) === wasSet,
+          s"AQE setting $setting: the key was ${if (wasSet) "unset" else "left set"}")
         val parts = ck.queryExecution.analyzed.collect {
           case r: LogicalRDD => r.outputPartitioning
         }
@@ -614,6 +619,61 @@ class PlanAuditSpec extends AnyFunSuite {
         assert(shared !== StorageLevel.NONE,
           s"$name did not cache the shared canonical edge list")
       }
+    } finally ops.Dedup.unpersistShared()
+  }
+
+  test("connected components, pageRank and kCore on a small graph start at most 2-3 jobs") {
+    // the driver path's whole cost is the gate's one read of the edge
+    // list; the rounds, the result relation and collecting it start none.
+    // kCore reads the shared canonical edge list, whose distinct is one
+    // more job (its shuffle stage) and whose first use one more (AQE
+    // materializes a fresh cache with a shuffle in its own stage)
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    val sc = spark.sparkContext
+    val prop = "graft.test.jobProbe"
+    // (job id, its stages' call sites) per job the body started
+    def jobsOf(name: String)(body: => Unit): Seq[(Int, String)] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty(prop) == name)
+            seen.add(e.jobId -> e.stageInfos.map(_.name).mkString(" + "))
+      }
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(prop, name)
+      try {
+        body
+        // listener events arrive in order: once a marker job is seen,
+        // every job the body started has been counted
+        val marker = sc.parallelize(Seq(1), 1).countAsync()
+        marker.get()
+        def jobs = scala.jdk.CollectionConverters.IteratorHasAsScala(seen.iterator).asScala.toSeq
+        val deadline = System.nanoTime() + 30e9.toLong
+        while (!jobs.exists(_._1 == marker.jobIds.head) && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(jobs.exists(_._1 == marker.jobIds.head), s"$name: listener never saw the marker job")
+        jobs.filter(_._1 != marker.jobIds.head)
+      } finally {
+        sc.setLocalProperty(prop, null)
+        sc.removeSparkListener(listener)
+      }
+    }
+    // a ~300-edge near-duplicate-shaped graph: 50 chains of 6 nodes, a
+    // few reversed duplicates and chords that close chains into cycles
+    val edges = (0L until 50L).flatMap(c => (0L until 5L).map(i => (c * 10 + i, c * 10 + i + 1))) ++
+      (0L until 40L).map(i => (i * 10 + 5, i * 10 + 4)) ++
+      (0L until 20L).map(i => (i * 10, i * 10 + 5))
+    val pairs = edges.toDF("id1", "id2").localCheckpoint()
+    val graph = pairs.select(col("id1").as("src"), col("id2").as("dst"))
+    try {
+      val counts = Seq(
+        ("connectedComponents", 2, jobsOf("cc")(ops.Dedup.connectedComponents(pairs).collect())),
+        ("pageRank", 2, jobsOf("pr")(ops.Graph.pageRank(graph).collect())),
+        ("kCore", 3, jobsOf("kcore")(ops.Graph.kCore(graph, 2).collect())))
+      counts.foreach { case (op, bound, jobs) =>
+        assert(jobs.size <= bound, s"$op started ${jobs.size} jobs on a small graph: $jobs") }
     } finally ops.Dedup.unpersistShared()
   }
 }

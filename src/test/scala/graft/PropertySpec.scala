@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -149,9 +151,12 @@ class PropertySpec extends AnyFunSuite {
     val edgeGen = Gen.listOf(for {
       a <- Gen.choose(0L, 15L); b <- Gen.choose(0L, 15L) if a != b
     } yield (math.min(a, b), math.max(a, b)))
+    // both paths: the driver-side rounds, then the distributed ones
+    for ((path, run) <- Seq[(String, (=> Array[Row]) => Array[Row])](
+        "driver" -> (f => f), "distributed" -> (f => distributed(f))))
     forAll(edgeGen.suchThat(_.nonEmpty)) { (edges: List[(Long, Long)]) =>
       val pairs = edges.distinct.toDF("id1", "id2")
-      val got = Dedup.connectedComponents(pairs).collect()
+      val got = run(Dedup.connectedComponents(pairs).collect())
         .map(r => (r.getLong(0), r.getLong(1))).toMap
       // reference union-find
       val parent = scala.collection.mutable.Map[Long, Long]()
@@ -161,7 +166,30 @@ class PropertySpec extends AnyFunSuite {
         val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) }
       val expected = parent.keys.map(x => x -> find(x)).toMap
       assert(got === expected.map { case (k, v) => k -> math.min(v, k) }.map {
-        case (k, _) => k -> find(k) })
+        case (k, _) => k -> find(k) }, s"$path path")
+    }
+  }
+
+  test("property: pageRank and kCore give the same rows on the driver and distributed") {
+    // multigraphs: duplicate pairs, reversed pairs and self-loops, each
+    // counted by the driver-side rounds as the distributed explode counts it
+    val pairGen = Gen.nonEmptyListOf(Gen.zip(Gen.choose(0L, 12L), Gen.choose(0L, 12L)))
+      .map(ps => ps ++ ps.take(3) ++ ps.take(3).map(_.swap))
+    forAll(pairGen) { (ps: List[(Long, Long)]) =>
+      val pairs = ps.toDF("src", "dst")
+      def both(name: String)(op: => org.apache.spark.sql.DataFrame): Unit = {
+        val (local, dist) = (op, distributed(op))
+        def onDriver(df: org.apache.spark.sql.DataFrame) =
+          df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+        assert(onDriver(local) && !onDriver(dist), s"$name did not take both paths")
+        assert(local.schema.map(f => (f.name, f.dataType)) ===
+          dist.schema.map(f => (f.name, f.dataType)), name)
+        assert(local.collect().map(_.toSeq).sortBy(_.toString).toSeq ===
+          distributed(dist.collect()).map(_.toSeq).sortBy(_.toString).toSeq,
+          s"$name differs between the driver and distributed paths on $ps")
+      }
+      both("pageRank")(ops.Graph.pageRank(pairs, iters = 3))
+      for (k <- 1 to 3) both(s"kCore k=$k")(ops.Graph.kCore(pairs, k))
     }
   }
 
