@@ -352,7 +352,7 @@ object Graph {
     // join upstream dwarfs the peeling itself — profiled 8s build vs 2s
     // of peeling on the co-purchase graph); cache-share it so a repeated
     // run, and [[triangles]] over the same pairs, reuse it.
-    // rows in node order on both paths; the driver path's local relation
+    // rows in node order on both paths; the driver path's result
     // is built sorted, since a Sort over it would plan a range exchange
     // (three jobs) for rows that are already in order
     OpCache.collectLongs(canonicalEdges(pairs, cache), cache) match {

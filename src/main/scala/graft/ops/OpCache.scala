@@ -51,12 +51,16 @@ private[graft] object OpCache {
   /** The same gate for a whole frame of longs: its rows packed row-major
     * into one primitive array (`Right`) when they fit [[DriverRows]] at
     * one budget row per column and hold no null — read in one job (plus
-    * the stages of `df`'s own shuffles) that stops after budget + 1 rows.
+    * the stages of `df`'s own shuffles) that stops after budget + 1 rows
+    * and sends nothing back past the budget or at a null. A cache the
+    * gate took itself is released once the rows are on the driver.
     * Otherwise `Left` of the frame the caller's distributed path must
     * read: `df` itself when it never qualified (a non-long column,
     * broadcasting off), else `df` as the gate read it — shared (`cache`)
     * or checkpointed — so that path re-reads what the gate computed
-    * instead of re-running `df`'s plan.
+    * instead of re-running `df`'s plan. Past the budget that costs a
+    * full cache (or checkpoint) of `df` and a one-task read of its first
+    * budget + 1 rows before the distributed rounds start.
     */
   def collectLongs(df: DataFrame, cache: Boolean = true): Either[DataFrame, Array[Long]] = {
     val spark = df.sparkSession
@@ -64,6 +68,7 @@ private[graft] object OpCache {
     if (driverOff(spark) || !df.schema.forall(_.dataType == LongType)) Left(df)
     else {
       import spark.implicits._
+      val fresh = cache && df.storageLevel == StorageLevel.NONE
       val kept = if (cache) share(df, enabled = true) else df.localCheckpoint()
       val cap = DriverRows / width
       val packed = kept.coalesce(1).mapPartitions { rows =>
@@ -72,17 +77,35 @@ private[graft] object OpCache {
         var clean = true
         while (clean && n <= cap && rows.hasNext) {
           val r = rows.next()
+          n += 1
           var i = 0
-          while (clean && i < width) {
+          while (clean && n <= cap && i < width) {
             if (r.isNullAt(i)) clean = false else out += r.getLong(i)
             i += 1
           }
-          n += 1
         }
-        if (clean) Iterator.single(out.result()) else Iterator.empty
+        if (clean && n <= cap) Iterator.single(out.result()) else Iterator.empty
       }.collect()
-      packed.headOption.filter(_.length <= cap * width).toRight(kept)
+      packed.headOption match {
+        case Some(ends) =>
+          if (fresh) handles.synchronized { handles -= kept; kept.unpersist() }
+          Right(ends)
+        case None => Left(kept)
+      }
     }
+  }
+
+  /** Run `f` with session conf `key` set to `value`, then restore the key
+    * exactly: its previous spelling, or unset when it was unset. Decided
+    * by `contains`, not `spark.conf.getOption`: the latter reads an unset
+    * key as its registered default, and the restore would then set it.
+    */
+  def withConf[A](spark: SparkSession, key: String, value: String)(f: => A): A = {
+    val conf = spark.sessionState.conf
+    val prev = if (conf.contains(key)) Some(conf.getConfString(key)) else None
+    spark.conf.set(key, value)
+    try f
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** Release every operator-internal cache in this JVM. Safe to call
@@ -118,22 +141,6 @@ private[graft] object OpCache {
   private val ckptLock = new Object
 
   def ckptPartitioned(df: DataFrame): DataFrame = ckptLock.synchronized {
-    val spark = df.sparkSession
-    val key = "spark.sql.adaptive.enabled"
-    // `contains`, not `spark.conf.getOption`: the latter reads an unset
-    // key as its registered default, and the restore would then set it
-    val conf = spark.sessionState.conf
-    val orig = if (conf.contains(key)) Some(conf.getConfString(key)) else None
-    if (orig.exists(_.equalsIgnoreCase("false"))) df.localCheckpoint()
-    else {
-      spark.conf.set(key, "false")
-      // restore EXACTLY what was set before (or unset): blind "true"
-      // would permanently flip a user's AQE=FALSE/False spelling on.
-      try df.localCheckpoint()
-      finally orig match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
+    withConf(df.sparkSession, "spark.sql.adaptive.enabled", "false")(df.localCheckpoint())
   }
 }

@@ -22,14 +22,8 @@ object TestSession {
     * connected components, PageRank and k-core on their distributed
     * rounds — and restore the session's setting exactly afterwards.
     */
-  def distributed[A](f: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val conf = spark.sessionState.conf
-    val prev = if (conf.contains(key)) Some(conf.getConfString(key)) else None
-    spark.conf.set(key, "-1")
-    try f
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  def distributed[A](f: => A): A =
+    ops.OpCache.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1")(f)
 }
 
 /** Smoke + semantics checks for every SparkEntry query at sf0.001.

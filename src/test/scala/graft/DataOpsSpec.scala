@@ -1648,13 +1648,10 @@ class DataOpsSpec extends AnyFunSuite {
     intercept[ArithmeticException](ops.Graph.pageRank(edges, scale = big).collect())
     intercept[ArithmeticException](distributed(ops.Graph.pageRank(edges, scale = big).collect()))
     // without ANSI mode both paths wrap, to the same rows
-    val ansi = "spark.sql.ansi.enabled"
-    val prev = spark.conf.getOption(ansi).filter(_ => spark.sessionState.conf.contains(ansi))
-    spark.conf.set(ansi, "false")
-    try {
+    ops.OpCache.withConf(spark, "spark.sql.ansi.enabled", "false") {
       val local = ops.Graph.pageRank(edges, scale = big).collect().map(_.toSeq).toSet
       assert(local === distributed(ops.Graph.pageRank(edges, scale = big).collect()).map(_.toSeq).toSet)
-    } finally prev.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
+    }
   }
 
   test("personalized pagerank matches hand arithmetic, stays source-local") {

@@ -568,9 +568,9 @@ class PlanAuditSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.functions.col
     val aqe = "spark.sql.adaptive.enabled"
-    val orig = spark.conf.getOption(aqe)
     val df = spark.range(200).select((col("id") % 13).as("key"), col("id").as("v"))
-    try {
+    // the session's own setting comes back, unset included, afterwards
+    ops.OpCache.withConf(spark, aqe, "true") {
       for (setting <- Seq(None, Some("true"), Some("FALSE"))) {
         setting.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
         val before = spark.conf.getOption(aqe) // unset reads the default
@@ -590,7 +590,7 @@ class PlanAuditSpec extends AnyFunSuite {
         assert(!plan.contains("Exchange"),
           s"AQE $setting: groupBy on the checkpoint key re-shuffles:\n$plan")
       }
-    } finally orig.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    }
   }
 
   test("graph operators over one pairs frame share one cached canonical edge list") {

@@ -193,6 +193,38 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("driver-side results past the broadcast size are column slices with the same rows") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    // a 1-byte broadcast size keeps the driver path (only a negative one
+    // turns it off) and puts every result past it
+    val pairs = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (3L, 4L), (5L, 6L), (6L, 6L),
+      (4L, 7L), (7L, 3L)).toDF("src", "dst")
+    def sliced(df: DataFrame) = df.queryExecution.analyzed.collectLeaves().exists {
+      case r: LogicalRDD => r.rdd.toDebugString.contains("LocalGraph.scala")
+      case _ => false
+    }
+    val runs = Seq[(String, () => DataFrame)](
+      "connectedComponents" -> (() => Dedup.connectedComponents(
+        pairs.select(col("src").as("id1"), col("dst").as("id2")))),
+      "pageRank" -> (() => ops.Graph.pageRank(pairs, iters = 3)),
+      "kCore k=2" -> (() => ops.Graph.kCore(pairs, 2)))
+    for ((name, op) <- runs) {
+      val (local, rows) = ops.OpCache.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "1") {
+        val df = op()
+        (df, df.collect().map(_.toSeq).toSeq)
+      }
+      val dist = distributed(op())
+      assert(sliced(local) && !sliced(dist), s"$name did not take both paths")
+      assert(local.schema.map(f => (f.name, f.dataType)) ===
+        dist.schema.map(f => (f.name, f.dataType)), name)
+      val want = distributed(dist.collect()).map(_.toSeq).toSeq
+      // k-core rows come in node order on both paths
+      if (name.startsWith("kCore")) assert(rows === want, name)
+      else assert(rows.sortBy(_.toString) === want.sortBy(_.toString), name)
+    }
+  }
+
   test("property: bloom filters never produce a false negative") {
     import graft.functions.BloomImpl
     forAll(Gen.zip(
