@@ -666,6 +666,60 @@ object ScaleSmoke {
       graft.ops.OpCache.unpersistAll()
     }
 
+    // the store cache's edge (graft.store.CachedParquetFileFormat): a
+    // loaded store whose files fit the driver budget on disk reads through
+    // the decoded-file cache, one just over it keeps Spark's columnar,
+    // uncached scan. Two capture stores of random hex payloads (decoded
+    // rows about as large as the files), sized from a probe store to sit
+    // 5 % under and 5 % over the budget, are each scanned by a full-scan
+    // aggregate twice: cold (the store's first read) and warm.
+    time("store_scan_budget") {
+      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+      import graft.store.CachedParquetFileFormat
+      val budget = graft.ops.OpCache.DriverBytes
+      val root = java.nio.file.Files.createTempDirectory("graft_scale_store").toString
+      val schema = "id BIGINT, session BIGINT, ts TIMESTAMP, topic STRING, data STRING"
+      def capture(name: String, n: Long): (String, Long) = {
+        spark.range(n).select(col("id"), expr("id div 2000").as("session"),
+            timestamp_seconds(lit(1700000000L) + col("id")).as("ts"),
+            element_at(array(lit("imu"), lit("scan"), lit("odom")),
+              (pmod(col("id"), lit(3)) + 1).cast("int")).as("topic"),
+            concat(sha2(col("id").cast("string"), 256), sha2((-col("id")).cast("string"), 256)).as("data"))
+          .write.parquet(s"$root/$name-in")
+        graft.streaming.Monitor.capture(spark.readStream.schema(schema).parquet(s"$root/$name-in"),
+          col("id"), col("session"), col("ts"), s"$root/$name", s"$root/$name-chk").awaitTermination()
+        val store = new org.apache.hadoop.fs.Path(s"$root/$name")
+        val files = graft.sources.FileWalk.dataFiles(
+          store.getFileSystem(spark.sparkContext.hadoopConfiguration), store)
+        (store.toString, files.map(_.getLen).sum)
+      }
+      val probeRows = 20000L
+      val perRow = capture("probe", probeRows)._2.toDouble / probeRows
+      for ((side, share) <- Seq(("under", 0.95), ("over", 1.05))) {
+        val (store, bytes) = capture(side, (budget * share / perRow).toLong)
+        val format = graft.api.Graft.load(spark, store).queryExecution.analyzed.collectFirst {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation => h.fileFormat.getClass.getSimpleName
+            case other => other.toString
+          }
+        }.getOrElse("?")
+        println(f"[scale]   $side%-5s store ${bytes / 1e6}%6.1f MB on disk (budget ${budget / 1e6}%.1f MB), " +
+          s"reads through $format")
+        require((bytes <= budget) == (side == "under"), s"the $side store landed on the wrong side")
+        val results = Seq("cold", "warm").map { pass =>
+          val misses = CachedParquetFileFormat.misses.get
+          val t0 = System.nanoTime()
+          val r = graft.api.Graft.load(spark, store)
+            .agg(count(lit(1)), sum(length(col("data"))), max("ts")).head()
+          println(f"[scale]   $side%-5s $pass scan ${(System.nanoTime() - t0) / 1e9}%7.2f s, " +
+            f"${CachedParquetFileFormat.misses.get - misses}%4d splits decoded, " +
+            f"cache ${CachedParquetFileFormat.cachedBytes / 1e6}%.1f MB")
+          r
+        }
+        require(results.distinct.size == 1, s"$side store: the warm scan differs from the cold one")
+      }
+    }
+
     // label propagation on 10^5 disjoint 10-cliques (10^6 nodes) plus a
     // 10^5-degree hub touching one node per clique: every clique node has
     // 9 intra-community edges against at most 1 hub edge, so NO non-hub

@@ -30,6 +30,12 @@ private[graft] object OpCache {
     */
   private val DriverRows = 4000000L
 
+  /** The same budget in bytes (32 MB, what [[collectLongs]] may hold):
+    * the bound of the store's caches of decoded files and footers, and
+    * the largest store whose files are cached at all (graft.store).
+    */
+  val DriverBytes: Long = DriverRows * 8
+
   /** A negative `spark.sql.autoBroadcastJoinThreshold` is Spark's
     * documented "broadcast nothing" switch; it also keeps every graph
     * pass distributed. Read here, never written.

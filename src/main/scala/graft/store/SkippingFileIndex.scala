@@ -7,6 +7,8 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMeta
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
+import graft.ops.OpCache
+
 /** File-level data skipping for a parquet store: Spark's own file index
   * with every file dropped whose footer min/max proves that no row can
   * satisfy a data filter.
@@ -14,8 +16,8 @@ import org.apache.spark.sql.types._
   * Spark checks parquet statistics only per row group, after it has
   * planned a task for every file and opened each one; a point lookup on a
   * store of N files therefore opens N footers per query. This index
-  * prunes before planning, from footers cached per store root, so the
-  * lookup opens the one file whose range holds the key.
+  * prunes before planning, from cached footers, so the lookup opens the
+  * one file whose range holds the key.
   *
   * Listing stays with the wrapped index: a `Monitor.capture` store is read
   * through its file-sink log (`_spark_metadata`), so only committed files
@@ -46,10 +48,7 @@ final class SkippingFileIndex(spark: SparkSession, underlying: FileIndex) extend
     val tests = dataFilters.flatMap(test(_, partCols))
     if (tests.isEmpty) listed
     else {
-      // every live file, to drop cache entries of files the log no longer lists
-      val live = if (partitionFilters.isEmpty) listed else underlying.listFiles(Nil, Nil)
-      val footers = cachedFooters(spark, rootPaths.mkString(","),
-        live.flatMap(_.files).map(key), listed.flatMap(_.files).map(key))
+      val footers = cachedFooters(spark, listed.flatMap(_.files).map(key))
       listed.map { dir =>
         dir.copy(files = dir.files.filter(f => footers.get(key(f)).forall(ft => tests.forall(_(ft)))))
       }
@@ -60,14 +59,23 @@ final class SkippingFileIndex(spark: SparkSession, underlying: FileIndex) extend
 object SkippingFileIndex {
 
   /** `df` with every parquet relation under it read through a
-    * [[SkippingFileIndex]]; other relations pass through unchanged.
+    * [[SkippingFileIndex]]; other relations pass through unchanged. A
+    * relation whose listed files fit the driver budget on disk
+    * (`graft.ops.OpCache.DriverBytes`) also reads through a
+    * [[CachedParquetFileFormat]], so repeated scans replay decoded files;
+    * above the budget it keeps Spark's columnar, uncached scan.
     */
   def wrap(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val plan = df.queryExecution.analyzed.transform {
       case l: LogicalRelation => l.relation match {
         case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] =>
-          l.copy(relation = h.copy(location = new SkippingFileIndex(spark, h.location))(h.sparkSession))
+          val format =
+            if (h.fileFormat.getClass == classOf[ParquetFileFormat] &&
+                h.location.sizeInBytes <= OpCache.DriverBytes) new CachedParquetFileFormat
+            else h.fileFormat
+          l.copy(relation = h.copy(location = new SkippingFileIndex(spark, h.location),
+            fileFormat = format)(h.sparkSession))
         case _ => l
       }
     }
@@ -75,27 +83,26 @@ object SkippingFileIndex {
   }
 
   /** A file as the cache knows it: a rewritten file is a new entry. */
-  private final case class FileKey(path: String, length: Long, mtime: Long)
+  private[graft] final case class FileKey(path: String, length: Long, mtime: Long)
 
   private def key(f: FileStatusWithMetadata) =
     FileKey(f.getPath.toString, f.getLen, f.getModificationTime)
 
-  /** Footers per store root; each root holds only its live files. */
-  private val cache = scala.collection.mutable.Map.empty[String, Map[FileKey, Footer]]
+  /** Footers of every store this JVM has pruned, least recently used
+    * dropped first past the driver budget in bytes; a deleted or rewritten
+    * file's entry is never read again and ages out.
+    */
+  private[graft] val footers = new ByteLru[FileKey, Footer](OpCache.DriverBytes,
+    (k, ft) => 2L * k.path.length + 96 + 160L * ft.ranges.size)
 
   /** Footers of `wanted`, reading the uncached ones in one job. */
-  private def cachedFooters(spark: SparkSession, root: String, live: Seq[FileKey],
-                            wanted: Seq[FileKey]): Map[FileKey, Footer] = {
-    val known = cache.synchronized(cache.getOrElse(root, Map.empty))
+  private def cachedFooters(spark: SparkSession, wanted: Seq[FileKey]): Map[FileKey, Footer] = {
+    val known = wanted.flatMap(k => footers.get(k).map(k -> _)).toMap
     val missing = wanted.filterNot(known.contains)
     val read = FooterStats.read(spark, missing.map(_.path))
     val fresh = missing.flatMap(k => read.get(k.path).map(k -> _))
-    val liveSet = live.toSet
-    cache.synchronized {
-      val merged = (cache.getOrElse(root, Map.empty) ++ fresh).filter { case (k, _) => liveSet(k) }
-      if (merged.isEmpty) cache.remove(root) else cache(root) = merged
-      merged
-    }
+    fresh.foreach { case (k, ft) => footers.put(k, ft) }
+    known ++ fresh
   }
 
   private def prunable(t: DataType): Boolean = t match {

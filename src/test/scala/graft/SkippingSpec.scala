@@ -6,7 +6,7 @@ import java.sql.{Date, Timestamp}
 import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -14,27 +14,36 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Graft
-import graft.store.{DocumentStore, FooterStats, SkippingFileIndex}
+import graft.ops.OpCache
+import graft.store.{CachedParquetFileFormat, DocumentStore, FooterStats, SkippingFileIndex}
 
 case class SkipDoc(id: Long, session: Long, ts: Timestamp, topic: String)
+case class CacheDoc(id: Long, session: Long, ts: Timestamp, topic: String, value: Double,
+                    data: Option[String])
 
 /** File skipping from parquet footer min/max (store.SkippingFileIndex):
   * pruned scans return exactly what unpruned scans return, and skip
-  * files only on integral comparisons.
+  * files only on integral comparisons. A loaded store within the driver
+  * budget reads through the decoded-file cache
+  * (store.CachedParquetFileFormat), which returns exactly what Spark's
+  * uncached reader returns.
   */
 class SkippingSpec extends AnyFunSuite {
   import TestSession._
 
-  /** Runs `df` and returns how many files its scans read. */
-  private def filesScanned(df: DataFrame): Long = {
-    df.collect()
+  /** Every node of `df`'s physical plan, top down, through adaptive plans. */
+  private def nodes(df: DataFrame): Seq[SparkPlan] = {
     def plans(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => plans(a.executedPlan)
       case other => other +: other.children.flatMap(plans)
     }
-    plans(df.queryExecution.executedPlan).collect {
-      case s: FileSourceScanExec => s.metrics("numFiles").value
-    }.sum
+    plans(df.queryExecution.executedPlan)
+  }
+
+  /** Runs `df` and returns how many files its scans read. */
+  private def filesScanned(df: DataFrame): Long = {
+    df.collect()
+    nodes(df).collect { case s: FileSourceScanExec => s.metrics("numFiles").value }.sum
   }
 
   private def ids(df: DataFrame): Seq[Long] =
@@ -132,12 +141,17 @@ class SkippingSpec extends AnyFunSuite {
   // ---- a Monitor.capture store: 20 sessions of 10 documents, one file each
 
   private lazy val captured: String = {
+    val base = 1700000000000L
+    capture((0 until 200).map(i =>
+      SkipDoc(i.toLong, i / 10L, new Timestamp(base + i * 1000L), if (i % 2 == 0) "imu" else "scan")))
+  }
+
+  /** `docs` captured by `Monitor.capture` into a new store, one file per session. */
+  private def capture[T <: Product : scala.reflect.runtime.universe.TypeTag](docs: Seq[T]): String = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = 1700000000000L
-    val input = MemoryStream[SkipDoc]
-    input.addData((0 until 200).map(i =>
-      SkipDoc(i.toLong, i / 10L, new Timestamp(base + i * 1000L), if (i % 2 == 0) "imu" else "scan")): _*)
+    val input = MemoryStream[T]
+    input.addData(docs: _*)
     val root = Files.createTempDirectory("graft_skip_capture").toString
     val q = graft.streaming.Monitor.capture(input.toDF(), col("id"), col("session"), col("ts"),
       s"$root/store", s"$root/chk")
@@ -180,5 +194,170 @@ class SkippingSpec extends AnyFunSuite {
     assert(FooterStats.jobs.get === jobs + 1, "one job reads every footer")
     assert(filesScanned(Graft.load(spark, dir).filter(col("id") >= 30L)) === 1)
     assert(FooterStats.jobs.get === jobs + 1, "a later load reuses the cached footers")
+  }
+
+  test("the footer cache stays inside its byte bound across many stores") {
+    def store(i: Int): String = {
+      val dir = Files.createTempDirectory("graft_skip_lru").toString + "/t"
+      spark.range(i * 1000L, i * 1000L + 30, 1, 3).write.parquet(dir)
+      dir
+    }
+    def prunes(dir: String, i: Int): Boolean = {
+      val hit = Graft.load(spark, dir).filter(col("id") === i * 1000L + 17)
+      filesScanned(hit) == 1 && ids(hit) == Seq(i * 1000L + 17)
+    }
+    val footers = SkippingFileIndex.footers
+    val before = footers.bytes
+    assert(prunes(store(0), 0))
+    val perFile = (footers.bytes - before) / 3
+    assert(perFile > 0)
+    val bound = 7 * perFile
+    footers.withBudget(bound) {
+      (1 to 8).foreach { i =>
+        val dir = store(i)
+        assert(prunes(dir, i), s"store $i")
+        assert(footers.bytes <= bound && footers.size <= 7, s"${footers.size} footers after store $i")
+        val jobs = FooterStats.jobs.get
+        assert(prunes(dir, i))
+        assert(FooterStats.jobs.get === jobs, s"store $i's footers were evicted at once")
+      }
+    }
+  }
+
+  // ---- the decoded-file cache of a loaded store
+
+  /** 12 sessions of 40 documents, one file per session; some payloads null. */
+  private lazy val docStore: String = {
+    val topics = Seq("imu", "scan", "odom")
+    capture((0 until 480).map { i =>
+      CacheDoc(i.toLong, i / 40L, new Timestamp(1700000000000L + i * 37000L), topics(i % 3),
+        (i * 7919 % 1000) / 10.0, if (i % 11 == 0) None else Some("x" * (i % 50)))
+    })
+  }
+
+  private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  /** The file formats `df` scans with, and a `ColumnarToRow` where Spark reads batches. */
+  private def uses(df: DataFrame): Seq[String] = nodes(df).collect {
+    case s: FileSourceScanExec => s.relation.fileFormat.getClass.getSimpleName
+    case _: ColumnarToRowExec => "ColumnarToRow"
+  }
+
+  test("a loaded store's second scan reads no split from disk") {
+    assert(uses(Graft.load(spark, docStore)) === Seq("CachedParquetFileFormat"))
+    // a new frame per scan: re-collecting one frame would reuse its shuffle
+    def scan() = Graft.load(spark, docStore).agg(sum("value"), count(col("data")), max("ts")).collect().toSeq
+    val first = scan()
+    val (hits, misses) = (CachedParquetFileFormat.hits.get, CachedParquetFileFormat.misses.get)
+    assert(CachedParquetFileFormat.cachedBytes > 0)
+    assert(scan() === first)
+    assert(Graft.load(spark, docStore).select("topic", "session").distinct().count() === 36)
+    assert(CachedParquetFileFormat.misses.get === misses, "a cached split was decoded again")
+    assert(CachedParquetFileFormat.hits.get === hits + 24)
+  }
+
+  test("a store above the budget plans Spark's columnar uncached scan") {
+    // the gate reads only the listed size: a sparse file just over the
+    // budget makes a store above it without writing 32 MB
+    val dir = Files.createTempDirectory("graft_skip_big").toString
+    val f = new java.io.RandomAccessFile(s"$dir/part-00000.parquet", "rw")
+    try f.setLength(OpCache.DriverBytes + 1) finally f.close()
+    val big = SkippingFileIndex.wrap(spark.read.schema("id LONG, v DOUBLE").parquet(dir))
+    assert(uses(big.filter(col("v") > 1.0)) === Seq("ColumnarToRow", "ParquetFileFormat"))
+    assert(uses(Graft.load(spark, docStore).filter(col("value") > 1.0)) === Seq("CachedParquetFileFormat"))
+  }
+
+  test("cached reads equal spark.read.parquet for the store ops, projections and partition filters") {
+    val raw = spark.read.parquet(docStore)
+    def both(name: String)(op: DataFrame => DataFrame): Unit = (1 to 2).foreach { pass =>
+      assert(sorted(op(Graft.load(spark, docStore))) === sorted(op(raw)), s"$name, pass $pass")
+    }
+    both("findById")(DocumentStore.findById(_, "_id", 123L))
+    both("findBySession")(DocumentStore.findBySession(_, "session", 7L))
+    both("countDocuments")(DocumentStore.countDocuments(_, Some(col("topic") === "imu" && col("value") > 40.0)))
+    both("uniqueSessions")(DocumentStore.uniqueSessions(_, "session", "ts"))
+    both("findWithMeta")(DocumentStore.findWithMeta(_,
+      col("sys_time_sec") >= 1700003000L && col("sys_time_sec") < 1700009000L, Seq("topic", "value")))
+    both("sortLimit")(df => DocumentStore.sortLimit(df.select("_id", "value"), Seq(col("value").desc, col("_id")), 17))
+    both("latestSnapshot")(DocumentStore.latestSnapshot(_, col("topic"), col("sys_time_sec"), col("_id"))
+      .select("topic", "_id"))
+    both("monitorRates")(DocumentStore.monitorRates(_, col("topic"), col("ts"), col("data"), "hour"))
+    val r = new Random(20261019)
+    val columns = raw.columns.toSeq
+    (0 until 12).foreach { i =>
+      val picked = r.shuffle(columns).take(1 + r.nextInt(columns.size))
+      val s = r.nextInt(12).toLong
+      val partFilter = r.nextInt(3) match {
+        case 0 => col("session") === s
+        case 1 => col("session") < s
+        case _ => col("session").isin(s, (s + 5) % 12)
+      }
+      val dataFilter = if (r.nextBoolean()) col("data").isNull || col("value") < r.nextInt(100) else lit(true)
+      both(s"projection #$i ${picked.mkString(",")}")(_.filter(partFilter && dataFilter).select(picked.map(col): _*))
+    }
+  }
+
+  test("file metadata columns read the same through the cached format") {
+    val raw = spark.read.parquet(docStore)
+    Seq(Seq("_id", "_metadata.file_path", "_metadata.file_size"),
+        Seq("_id", "session", "_metadata.row_index")).foreach { cs =>
+      (1 to 2).foreach { _ =>
+        assert(sorted(Graft.load(spark, docStore).select(cs.map(col): _*)) ===
+          sorted(raw.select(cs.map(col): _*)), cs.mkString(","))
+      }
+    }
+  }
+
+  test("a LIMIT that stops mid-file caches nothing") {
+    val dir = Files.createTempDirectory("graft_skip_limit").toString + "/t"
+    spark.range(0, 5000, 1, 1).withColumn("s", col("id").cast("string")).write.parquet(dir)
+    val first = Graft.load(spark, dir).limit(10)
+    assert(sorted(first) === sorted(spark.read.parquet(dir).limit(10)))
+    val misses = CachedParquetFileFormat.misses.get
+    assert(Graft.load(spark, dir).agg(sum("id")).head().getLong(0) === 4999L * 5000 / 2)
+    assert(CachedParquetFileFormat.misses.get === misses + 1, "the partly read file was cached")
+  }
+
+  test("a file rewritten at the same path is read fresh") {
+    val store = Files.createTempDirectory("graft_skip_rewrite")
+    /** Rows `lo until lo + n` as one new parquet file. */
+    def part(lo: Long, n: Long): java.nio.file.Path = {
+      val at = Files.createTempDirectory("graft_skip_part").toString + "/t"
+      spark.range(lo, lo + n, 1, 1).withColumn("s", col("id").cast("string")).write.parquet(at)
+      Files.list(Paths.get(at)).filter(_.toString.endsWith(".parquet")).findFirst().get
+    }
+    Files.copy(part(0, 100), store.resolve("a.parquet"))
+    val target = store.resolve("b.parquet")
+    Files.copy(part(100, 100), target)
+    def check(): Unit = (1 to 2).foreach { _ =>
+      assert(sorted(Graft.load(spark, store.toString)) === sorted(spark.read.parquet(store.toString)))
+    }
+    check()
+    val mtime = Files.getLastModifiedTime(target).toMillis
+    // same row count, other values: a new mtime, likely the same length
+    Files.copy(part(500, 100), target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    target.toFile.setLastModified(mtime + 5000)
+    check()
+    // more rows: a new length
+    Files.copy(part(900, 300), target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    target.toFile.setLastModified(mtime + 5000)
+    check()
+    assert(Graft.load(spark, store.toString).count() === 400)
+  }
+
+  test("a corrupt file under ignoreCorruptFiles reads as uncached and is not cached") {
+    val dir = Files.createTempDirectory("graft_skip_corrupt").toString + "/t"
+    spark.range(0, 60, 1, 3).withColumn("s", col("id").cast("string")).write.parquet(dir)
+    Files.write(Paths.get(dir, "part-99999-corrupt.parquet"), Array.fill[Byte](300)(7))
+    OpCache.withConf(spark, "spark.sql.files.ignoreCorruptFiles", "true") {
+      val (hits, misses, bytes) = (CachedParquetFileFormat.hits.get, CachedParquetFileFormat.misses.get,
+        CachedParquetFileFormat.cachedBytes)
+      (1 to 2).foreach { _ =>
+        assert(sorted(Graft.load(spark, dir)) === sorted(spark.read.parquet(dir)))
+        assert(Graft.load(spark, dir).count() === 60)
+      }
+      assert((CachedParquetFileFormat.hits.get, CachedParquetFileFormat.misses.get) === ((hits, misses)))
+      assert(CachedParquetFileFormat.cachedBytes === bytes)
+    }
   }
 }
