@@ -668,11 +668,15 @@ object ScaleSmoke {
 
     // the store cache's edge (graft.store.CachedParquetFileFormat): a
     // loaded store whose files fit the driver budget on disk reads through
-    // the decoded-file cache, one just over it keeps Spark's columnar,
-    // uncached scan. Two capture stores of random hex payloads (decoded
-    // rows about as large as the files), sized from a probe store to sit
-    // 5 % under and 5 % over the budget, are each scanned by a full-scan
-    // aggregate twice: cold (the store's first read) and warm.
+    // the decoded-file cache; one just over it keeps Spark's columnar,
+    // uncached scan, and so does a store under it on disk whose decoded
+    // rows turned out larger than the cache. Capture stores of random hex
+    // payloads, sized from a probe store: "fits" decodes to 90 % of the
+    // budget, "under" sits 5 % under it on disk (and decodes past it),
+    // "over" 5 % over it on disk. Each is scanned by a full-scan aggregate
+    // three times, each through a new load: cold (every split's first
+    // read), fill (the second read, which fills the cache) and warm; then
+    // once more through spark.read.parquet, for reference.
     time("store_scan_budget") {
       import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       import graft.store.CachedParquetFileFormat
@@ -693,30 +697,39 @@ object ScaleSmoke {
           store.getFileSystem(spark.sparkContext.hadoopConfiguration), store)
         (store.toString, files.map(_.getLen).sum)
       }
+      def scan(df: DataFrame) = df.agg(count(lit(1)), sum(length(col("data"))), max("ts")).head()
+      // bytes a row on disk, and in the cache once decoded
       val probeRows = 20000L
-      val perRow = capture("probe", probeRows)._2.toDouble / probeRows
-      for ((side, share) <- Seq(("under", 0.95), ("over", 1.05))) {
-        val (store, bytes) = capture(side, (budget * share / perRow).toLong)
-        val format = graft.api.Graft.load(spark, store).queryExecution.analyzed.collectFirst {
-          case l: LogicalRelation => l.relation match {
-            case h: HadoopFsRelation => h.fileFormat.getClass.getSimpleName
-            case other => other.toString
-          }
-        }.getOrElse("?")
-        println(f"[scale]   $side%-5s store ${bytes / 1e6}%6.1f MB on disk (budget ${budget / 1e6}%.1f MB), " +
-          s"reads through $format")
-        require((bytes <= budget) == (side == "under"), s"the $side store landed on the wrong side")
-        val results = Seq("cold", "warm").map { pass =>
-          val misses = CachedParquetFileFormat.misses.get
+      val (probe, probeBytes) = capture("probe", probeRows)
+      val cached0 = CachedParquetFileFormat.cachedBytes
+      (1 to 2).foreach(_ => scan(graft.api.Graft.load(spark, probe)))
+      val decodedPerRow = (CachedParquetFileFormat.cachedBytes - cached0).toDouble / probeRows
+      val diskPerRow = probeBytes.toDouble / probeRows
+      println(f"[scale]   probe: $diskPerRow%.1f B a row on disk, $decodedPerRow%.1f B decoded")
+      for ((side, rows) <- Seq(("fits", budget * 0.90 / decodedPerRow), ("under", budget * 0.95 / diskPerRow),
+                               ("over", budget * 1.05 / diskPerRow))) {
+        val (store, bytes) = capture(side, rows.toLong)
+        println(f"[scale]   $side%-5s store ${bytes / 1e6}%6.1f MB on disk (budget ${budget / 1e6}%.1f MB)")
+        require((bytes <= budget) == (side != "over"), s"the $side store landed on the wrong side")
+        // "spark": the same aggregate through spark.read.parquet, uncached
+        val results = Seq("cold", "fill", "warm", "spark").map { pass =>
+          val df = if (pass == "spark") spark.read.parquet(store) else graft.api.Graft.load(spark, store)
+          val format = df.queryExecution.analyzed.collectFirst {
+            case l: LogicalRelation => l.relation match {
+              case h: HadoopFsRelation => h.fileFormat.getClass.getSimpleName
+              case other => other.toString
+            }
+          }.getOrElse("?")
+          val (hits, misses) = (CachedParquetFileFormat.hits.get, CachedParquetFileFormat.misses.get)
           val t0 = System.nanoTime()
-          val r = graft.api.Graft.load(spark, store)
-            .agg(count(lit(1)), sum(length(col("data"))), max("ts")).head()
-          println(f"[scale]   $side%-5s $pass scan ${(System.nanoTime() - t0) / 1e9}%7.2f s, " +
-            f"${CachedParquetFileFormat.misses.get - misses}%4d splits decoded, " +
+          val r = scan(df)
+          println(f"[scale]   $side%-5s $pass scan ${(System.nanoTime() - t0) / 1e9}%7.2f s via $format%-23s " +
+            f"${CachedParquetFileFormat.misses.get - misses}%4d splits from disk, " +
+            f"${CachedParquetFileFormat.hits.get - hits}%4d from the cache, " +
             f"cache ${CachedParquetFileFormat.cachedBytes / 1e6}%.1f MB")
           r
         }
-        require(results.distinct.size == 1, s"$side store: the warm scan differs from the cold one")
+        require(results.distinct.size == 1, s"$side store: the scans differ")
       }
     }
 

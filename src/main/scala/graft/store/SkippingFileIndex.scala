@@ -62,17 +62,22 @@ object SkippingFileIndex {
     * [[SkippingFileIndex]]; other relations pass through unchanged. A
     * relation whose listed files fit the driver budget on disk
     * (`graft.ops.OpCache.DriverBytes`) also reads through a
-    * [[CachedParquetFileFormat]], so repeated scans replay decoded files;
-    * above the budget it keeps Spark's columnar, uncached scan.
+    * [[CachedParquetFileFormat]], so repeated scans replay decoded files,
+    * unless an earlier scan of the same store at this size or smaller
+    * found its decoded rows larger than the cache; otherwise it keeps
+    * Spark's columnar, uncached scan.
     */
   def wrap(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val plan = df.queryExecution.analyzed.transform {
       case l: LogicalRelation => l.relation match {
         case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          val store = h.location.rootPaths.map(_.toString).sorted.mkString(",")
+          val bytes = h.location.sizeInBytes
           val format =
-            if (h.fileFormat.getClass == classOf[ParquetFileFormat] &&
-                h.location.sizeInBytes <= OpCache.DriverBytes) new CachedParquetFileFormat
+            if (h.fileFormat.getClass == classOf[ParquetFileFormat] && bytes <= OpCache.DriverBytes &&
+                CachedParquetFileFormat.mayCache(store, bytes))
+              new CachedParquetFileFormat(store, bytes, columnar = !CachedParquetFileFormat.holds(store))
             else h.fileFormat
           l.copy(relation = h.copy(location = new SkippingFileIndex(spark, h.location),
             fileFormat = format)(h.sparkSession))

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Graft
 import graft.ops.OpCache
-import graft.store.{CachedParquetFileFormat, DocumentStore, FooterStats, SkippingFileIndex}
+import graft.store.{ByteLru, CachedParquetFileFormat, DocumentStore, FooterStats, SkippingFileIndex}
 
 case class SkipDoc(id: Long, session: Long, ts: Timestamp, topic: String)
 case class CacheDoc(id: Long, session: Long, ts: Timestamp, topic: String, value: Double,
@@ -196,7 +196,26 @@ class SkippingSpec extends AnyFunSuite {
     assert(FooterStats.jobs.get === jobs + 1, "a later load reuses the cached footers")
   }
 
-  test("the footer cache stays inside its byte bound across many stores") {
+  test("ByteLru stays inside its byte bound, dropping the least recently used first") {
+    val lru = new ByteLru[Int, String](100, (_, v) => v.length.toLong)
+    (0 until 5).foreach(i => lru.put(i, "x" * 20))
+    assert((lru.size, lru.bytes) === ((5, 100L)))
+    assert(lru.get(0).isDefined) // 0 is now the most recently used
+    lru.put(5, "y" * 30)
+    assert((1 to 2).map(lru.get) === Seq(None, None), "the two least recently used go")
+    assert(Seq(0, 3, 4, 5).forall(lru.get(_).isDefined))
+    assert(lru.bytes === 90L)
+    lru.put(6, "z" * 101)
+    assert(lru.get(6).isEmpty && lru.bytes === 90L, "an entry heavier than the budget is never kept")
+    // a share of the keys may take the whole budget, never more
+    assert(!lru.putWithin(7, "w" * 60, k => k == 0 || k == 5))
+    assert(lru.get(7).isEmpty && lru.bytes === 90L)
+    assert(lru.putWithin(7, "w" * 50, k => k == 0 || k == 5))
+    assert(lru.bytes <= 100L && lru.get(7).isDefined)
+    assert(lru.weighed(k => k == 0 || k == 5 || k == 7) === 100L, "only the other entries made room")
+  }
+
+  test("the footer cache prunes each of many stores exactly, within its byte bound") {
     def store(i: Int): String = {
       val dir = Files.createTempDirectory("graft_skip_lru").toString + "/t"
       spark.range(i * 1000L, i * 1000L + 30, 1, 3).write.parquet(dir)
@@ -206,21 +225,14 @@ class SkippingSpec extends AnyFunSuite {
       val hit = Graft.load(spark, dir).filter(col("id") === i * 1000L + 17)
       filesScanned(hit) == 1 && ids(hit) == Seq(i * 1000L + 17)
     }
-    val footers = SkippingFileIndex.footers
-    val before = footers.bytes
-    assert(prunes(store(0), 0))
-    val perFile = (footers.bytes - before) / 3
-    assert(perFile > 0)
-    val bound = 7 * perFile
-    footers.withBudget(bound) {
-      (1 to 8).foreach { i =>
-        val dir = store(i)
-        assert(prunes(dir, i), s"store $i")
-        assert(footers.bytes <= bound && footers.size <= 7, s"${footers.size} footers after store $i")
-        val jobs = FooterStats.jobs.get
-        assert(prunes(dir, i))
-        assert(FooterStats.jobs.get === jobs, s"store $i's footers were evicted at once")
-      }
+    (0 until 9).foreach { i =>
+      val dir = store(i)
+      val jobs = FooterStats.jobs.get
+      assert(prunes(dir, i), s"store $i")
+      assert(FooterStats.jobs.get === jobs + 1, s"store $i: one job reads its footers")
+      assert(prunes(dir, i))
+      assert(FooterStats.jobs.get === jobs + 1, s"store $i: its footers are cached")
+      assert(SkippingFileIndex.footers.bytes <= OpCache.DriverBytes)
     }
   }
 
@@ -243,17 +255,25 @@ class SkippingSpec extends AnyFunSuite {
     case _: ColumnarToRowExec => "ColumnarToRow"
   }
 
-  test("a loaded store's second scan reads no split from disk") {
-    assert(uses(Graft.load(spark, docStore)) === Seq("CachedParquetFileFormat"))
+  test("a loaded store's split is read from disk twice, then from the cache") {
     // a new frame per scan: re-collecting one frame would reuse its shuffle
-    def scan() = Graft.load(spark, docStore).agg(sum("value"), count(col("data")), max("ts")).collect().toSeq
+    def load() = Graft.load(spark, docStore)
+    def scan() = load().agg(sum("value"), count(col("data")), max("ts")).collect().toSeq
+    def counts = (CachedParquetFileFormat.hits.get, CachedParquetFileFormat.misses.get)
+    assert(uses(load()) === Seq("ColumnarToRow", "CachedParquetFileFormat"),
+      "a store the cache knows nothing of is read as Spark reads it")
+    val (h0, m0) = counts
+    val bytes = CachedParquetFileFormat.cachedBytes
     val first = scan()
-    val (hits, misses) = (CachedParquetFileFormat.hits.get, CachedParquetFileFormat.misses.get)
-    assert(CachedParquetFileFormat.cachedBytes > 0)
+    assert(counts === ((h0, m0 + 12)), "the first scan reads each of the 12 files")
+    assert(CachedParquetFileFormat.cachedBytes - bytes < 12 * 1024, "a file read once keeps only a marker")
+    assert(uses(load()) === Seq("CachedParquetFileFormat"), "a later load reads rows through the cache")
     assert(scan() === first)
-    assert(Graft.load(spark, docStore).select("topic", "session").distinct().count() === 36)
-    assert(CachedParquetFileFormat.misses.get === misses, "a cached split was decoded again")
-    assert(CachedParquetFileFormat.hits.get === hits + 24)
+    assert(counts === ((h0, m0 + 24)), "the second scan reads each file again, into the cache")
+    assert(CachedParquetFileFormat.cachedBytes - bytes > 12 * 1024)
+    assert(scan() === first)
+    assert(load().select("topic", "session").distinct().count() === 36)
+    assert(counts === ((h0 + 24, m0 + 24)), "a cached split was read from disk again")
   }
 
   test("a store above the budget plans Spark's columnar uncached scan") {
@@ -264,12 +284,14 @@ class SkippingSpec extends AnyFunSuite {
     try f.setLength(OpCache.DriverBytes + 1) finally f.close()
     val big = SkippingFileIndex.wrap(spark.read.schema("id LONG, v DOUBLE").parquet(dir))
     assert(uses(big.filter(col("v") > 1.0)) === Seq("ColumnarToRow", "ParquetFileFormat"))
+    Graft.load(spark, docStore).count() // read once: later loads read rows through the cache
     assert(uses(Graft.load(spark, docStore).filter(col("value") > 1.0)) === Seq("CachedParquetFileFormat"))
   }
 
   test("cached reads equal spark.read.parquet for the store ops, projections and partition filters") {
     val raw = spark.read.parquet(docStore)
-    def both(name: String)(op: DataFrame => DataFrame): Unit = (1 to 2).foreach { pass =>
+    // first read, fill, cached read
+    def both(name: String)(op: DataFrame => DataFrame): Unit = (1 to 3).foreach { pass =>
       assert(sorted(op(Graft.load(spark, docStore))) === sorted(op(raw)), s"$name, pass $pass")
     }
     both("findById")(DocumentStore.findById(_, "_id", 123L))
@@ -301,7 +323,7 @@ class SkippingSpec extends AnyFunSuite {
     val raw = spark.read.parquet(docStore)
     Seq(Seq("_id", "_metadata.file_path", "_metadata.file_size"),
         Seq("_id", "session", "_metadata.row_index")).foreach { cs =>
-      (1 to 2).foreach { _ =>
+      (1 to 3).foreach { _ =>
         assert(sorted(Graft.load(spark, docStore).select(cs.map(col): _*)) ===
           sorted(raw.select(cs.map(col): _*)), cs.mkString(","))
       }
@@ -311,11 +333,15 @@ class SkippingSpec extends AnyFunSuite {
   test("a LIMIT that stops mid-file caches nothing") {
     val dir = Files.createTempDirectory("graft_skip_limit").toString + "/t"
     spark.range(0, 5000, 1, 1).withColumn("s", col("id").cast("string")).write.parquet(dir)
-    val first = Graft.load(spark, dir).limit(10)
-    assert(sorted(first) === sorted(spark.read.parquet(dir).limit(10)))
+    def total() = Graft.load(spark, dir).agg(sum("id")).head().getLong(0)
+    assert(total() === 4999L * 5000 / 2)
+    // the file's second read: it would fill the cache if it ran to the end
+    assert(sorted(Graft.load(spark, dir).limit(10)) === sorted(spark.read.parquet(dir).limit(10)))
     val misses = CachedParquetFileFormat.misses.get
-    assert(Graft.load(spark, dir).agg(sum("id")).head().getLong(0) === 4999L * 5000 / 2)
+    assert(total() === 4999L * 5000 / 2)
     assert(CachedParquetFileFormat.misses.get === misses + 1, "the partly read file was cached")
+    assert(total() === 4999L * 5000 / 2)
+    assert(CachedParquetFileFormat.misses.get === misses + 1, "the wholly read file was not cached")
   }
 
   test("a file rewritten at the same path is read fresh") {
@@ -329,7 +355,7 @@ class SkippingSpec extends AnyFunSuite {
     Files.copy(part(0, 100), store.resolve("a.parquet"))
     val target = store.resolve("b.parquet")
     Files.copy(part(100, 100), target)
-    def check(): Unit = (1 to 2).foreach { _ =>
+    def check(): Unit = (1 to 3).foreach { _ =>
       assert(sorted(Graft.load(spark, store.toString)) === sorted(spark.read.parquet(store.toString)))
     }
     check()
@@ -359,5 +385,28 @@ class SkippingSpec extends AnyFunSuite {
       assert((CachedParquetFileFormat.hits.get, CachedParquetFileFormat.misses.get) === ((hits, misses)))
       assert(CachedParquetFileFormat.cachedBytes === bytes)
     }
+  }
+
+  test("a store whose decoded rows outgrow the cache never evicts its own splits") {
+    // 8 files of 75 000 rows: ~5 MB each decoded (a 40-character string a
+    // row), ~41 MB in all, but well under the budget on disk
+    val dir = Files.createTempDirectory("graft_skip_outgrow").toString + "/t"
+    spark.range(0, 600000, 1, 8).withColumn("s", lit("x" * 40)).write.parquet(dir)
+    val want = 599999L * 600000 / 2
+    def scan(df: DataFrame): Long = df.agg(sum("id")).head().getLong(0)
+    assert(scan(Graft.load(spark, dir)) === want)
+    val df = Graft.load(spark, dir)
+    assert(uses(df) === Seq("CachedParquetFileFormat"))
+    assert(scan(df) === want)
+    assert(CachedParquetFileFormat.cachedBytes <= OpCache.DriverBytes)
+    // the splits that fitted stay; the others are read from disk, unfilled
+    (1 to 2).foreach { _ =>
+      val (h, m) = (CachedParquetFileFormat.hits.get, CachedParquetFileFormat.misses.get)
+      assert(scan(df) === want)
+      val (hits, misses) = (CachedParquetFileFormat.hits.get - h, CachedParquetFileFormat.misses.get - m)
+      assert(hits + misses === 8 && hits >= 4 && misses >= 1, s"$hits hits, $misses misses")
+    }
+    assert(uses(Graft.load(spark, dir)) === Seq("ColumnarToRow", "ParquetFileFormat"),
+      "a later load of the outgrown store keeps Spark's columnar scan")
   }
 }
