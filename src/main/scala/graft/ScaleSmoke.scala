@@ -1371,24 +1371,37 @@ object ScaleSmoke {
     // hash soup. Positions explode to O(corpus chars) map-side; the only
     // wide exchange keys the 30-char gram. Span count must equal the
     // planted-block count exactly (one maximal island per planted block,
-    // no spans from the unique strata).
-    time("dup_spans_planted") {
-      val block = "all rights reserved contact legal department before redistribution"
-      val docs = spark.range(nDocs).select(
-        col("id").as("doc_id"),
-        when(pmod(col("id"), lit(10)) === 0L,
-          concat(lit(block + " "), concat_ws(" ", (0 until 20).map(i =>
-            concat(lit("u"), abs(hash(col("id"), lit(i)).cast("long")))): _*)))
-          .otherwise(concat_ws(" ", (0 until 28).map(i =>
-            concat(lit("u"), abs(hash(col("id"), lit(i + 99)).cast("long")))): _*))
-          .as("text"))
-      val spans = graft.ops.TextAnalysis.dupSpans(docs, col("doc_id"), col("text"))
-      val n = spans.count()
-      val planted = docs.filter(pmod(col("doc_id"), lit(10)) === 0L).count()
-      println(s"[scale]   spans: $n (planted blocks: $planted)")
-      require(n == planted,
-        s"span count must equal the planted-block count exactly: $n != $planted")
-    }
+    // no spans from the unique strata). The corpus is built and
+    // checkpointed before the timer starts, so the time is dupSpans'.
+    def plantedDupSpans(name: String, n: Long, plantedWords: Int, otherWords: Int): Unit =
+      if (only.forall(_.contains(name))) {
+        val block = "all rights reserved contact legal department before redistribution"
+        def soup(words: Int, salt: Int) = concat_ws(" ", transform(
+          sequence(lit(salt), lit(salt + words - 1)),
+          i => concat(lit("u"), abs(hash(col("id"), i)).cast("long"))))
+        val docs = spark.range(n).select(
+          col("id").as("doc_id"),
+          when(pmod(col("id"), lit(10)) === 0L,
+            concat(lit(block + " "), soup(plantedWords, 0)))
+            .otherwise(soup(otherWords, 99))
+            .as("text"))
+          .localCheckpoint()
+        val planted = docs.filter(pmod(col("doc_id"), lit(10)) === 0L).count()
+        val chars = docs.agg(sum(length(col("text")))).head.getLong(0)
+        timed(name) {
+          val found = graft.ops.TextAnalysis.dupSpans(docs, col("doc_id"), col("text")).count()
+          println(s"[scale]   spans: $found (planted blocks: $planted, corpus chars: $chars)")
+          require(found == planted,
+            s"span count must equal the planted-block count exactly: $found != $planted")
+        }
+      }
+    plantedDupSpans("dup_spans_planted", nDocs, 20, 28)
+    // one corpus size (~0.8 M chars), two document lengths: 1500 docs of
+    // ~550 chars against 150 of ~5.5 k. Per-position substring made the
+    // long shape cost O(L) more per char; the one-pass gram kernel keeps
+    // both linear in corpus chars.
+    plantedDupSpans("dup_spans_short_docs", 1500, 42, 48)
+    plantedDupSpans("dup_spans_long_docs", 150, 474, 480)
 
     // textRank at 100×: per-doc graphs are independent components, so
     // every exchange is (doc_id, word)-keyed micro-groups; 3 rounds over

@@ -1330,9 +1330,7 @@ object SparkEntry {
     // same construction (the lshPlantedRecall fixture pattern)
     "corpus_clean_lines" -> ((s, dir) => {
       val pages = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          split(regexp_replace(lower(col("text")), "\\s+", " "), " ")
-            .as("words"))
+        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("words"))
         .select(col("doc_id"), expr(
           """array_join(transform(
             |  sequence(0, cast(ceil(size(words) / 8.0) as int) - 1, 1),
@@ -1351,9 +1349,7 @@ object SparkEntry {
     // occurrence in (doc_id, line_idx) order survives
     "corpus_dedup_lines" -> ((s, dir) => {
       val pages = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          split(regexp_replace(lower(col("text")), "\\s+", " "), " ")
-            .as("words"))
+        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("words"))
         .select(col("doc_id"), expr(
           """concat(
             |  case when doc_id % 5 = 0

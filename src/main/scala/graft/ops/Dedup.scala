@@ -498,9 +498,8 @@ object Dedup {
     // twin = the doc with every dropEvery-th word (1-based) removed,
     // rebuilt over the SAME normalization the shingler applies
     val twins = sampled.select(col("doc_id"),
-      array_join(expr(
-        "filter(split(regexp_replace(lower(text), '\\\\s+', ' '), ' ')," +
-          s" (x, i) -> (i + 1) % $dropEvery != 0)"), " ").as("text"))
+      array_join(filter(TextAnalysis.tokens(col("text")),
+        (_, i) => (i + 1) % dropEvery =!= 0), " ").as("text"))
     val corpusBands = lshBands(base, col("doc_id"), col("text"), numHashes, bands)
     // twin ids are the two's-complement mirror -doc_id - 1: a bijection
     // from the non-negative id space onto the negatives, so a twin can

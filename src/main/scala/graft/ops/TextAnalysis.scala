@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextKernels
+
 /** Text-analysis operators for training-data pipelines: normalization,
   * language ID, quality scoring, token counting, fingerprinting, exact
   * dedup. All pure expressions (whole-stage codegen, no UDFs); one scan,
@@ -21,8 +23,11 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** lower + collapse whitespace — shared normalization for all ops. */
-  def normalize(c: Column): Column = regexp_replace(lower(c), "\\s+", " ")
+  /** lower + collapse whitespace — shared normalization for all ops.
+    * [[TextKernels.lower]] is Spark's `lower` without its ICU title-case
+    * table, the first-use cost of every cold run.
+    */
+  def normalize(c: Column): Column = regexp_replace(TextKernels.lower(c), "\\s+", " ")
 
   def tokens(c: Column): Column = split(normalize(c), " ")
 
@@ -349,8 +354,8 @@ object TextAnalysis {
         col("line").rlike("[.!?\"]\\s*$") &&
           size(split(trim(col("line")), "\\s+")) >= minWords &&
           !col("line").contains("{") &&
-          !lower(col("line")).contains("javascript") &&
-          !lower(col("line")).contains("lorem ipsum"))
+          !TextKernels.lower(col("line")).contains("javascript") &&
+          !TextKernels.lower(col("line")).contains("lorem ipsum"))
 
   /** Composite quality gate — the keep/drop decision that ends a curation
     * pipeline, with an auditable reason bitmask per document (bit0 too
@@ -1162,12 +1167,11 @@ object TextAnalysis {
   def dupSpans(df: DataFrame, idCol: Column, textCol: Column,
                k: Int = 30): DataFrame = {
     require(k >= 2)
-    val grams = df.select(idCol.as("doc_id"), textCol.as("text"))
-      .filter(length(col("text")) >= k)
-      .select(col("doc_id"), col("text"),
-        explode(sequence(lit(1), length(col("text")) - (k - 1))).as("p"))
-      .select(col("doc_id"), col("p").cast("long").as("p"),
-        expr(s"substring(text, p, $k)").as("g"))
+    // every position's k-gram as a byte slice of one walk per document;
+    // substring(text, p, k) per position would walk from byte 0: O(L²)
+    val grams = df.select(idCol.as("doc_id"),
+        posexplode(TextKernels.charGrams(textCol, k)).as(Seq("p0", "g")))
+      .select(col("doc_id"), (col("p0") + 1L).as("p"), col("g"))
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("p"))
     // duplicated-gram seeds via a grouped count + equi-join instead of a

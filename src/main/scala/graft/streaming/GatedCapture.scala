@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.TextKernels
+
 /** Start/stop-gated capture — the reference's actionlib-bracketed
   * collection mode (`scenario.py:101-137`,
   * `init_way_point_action_server_video`: a control goal whose message is
@@ -47,7 +49,7 @@ object GatedCapture {
     * Boolean encoder would mishandle.
     */
   def isStart(msg: Column): Column =
-    coalesce(lower(msg).isin("true", "t", "start"), lit(false))
+    coalesce(TextKernels.lower(msg).isin("true", "t", "start"), lit(false))
 
   /** Fold a control table (gate key, event-time micros, start flag) into
     * gate-open intervals `(gate, start_us, end_us)` — `end_us` NULL for

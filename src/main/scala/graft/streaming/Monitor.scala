@@ -1137,7 +1137,7 @@ object Monitor {
   def dedupSpansStream(stream: DataFrame, idCol: Column, textCol: Column,
                        tsCol: String, width: Int = 12,
                        watermarkDelay: String = "10 minutes"): DataFrame = {
-    val words = split(regexp_replace(lower(textCol), "\\s+", " "), " ")
+    val words = graft.ops.TextAnalysis.tokens(textCol)
     stream
       .select(idCol.as("doc_id"), col(tsCol), words.as("words"))
       .select(col("doc_id"), col(tsCol),

@@ -2984,17 +2984,33 @@ class DataOpsSpec extends AnyFunSuite {
     }
   }
 
-  /** In-memory reference for [[TextAnalysis.dupSpans]]: count every char
-    * k-gram corpus-wide, keep positions whose gram repeats, merge
-    * consecutive positions into maximal spans.
+  /** In-memory reference for [[TextAnalysis.dupSpans]] over UTF-8 bytes:
+    * count every char k-gram corpus-wide, keep positions whose gram
+    * repeats, merge consecutive positions into maximal spans. A char is
+    * its lead byte's UTF-8 length (RFC 3629: C2-DF 2, E0-EF 3, F0-F4 4),
+    * anything else one byte, and a truncated sequence at the end stops at
+    * the last byte. Rows come back ordered like dupSpans' output.
     */
   private def dupSpansBrute(rows: Seq[(Long, String)],
-                            k: Int): Set[(Long, Long, Long, Long)] = {
-    val grams = rows.flatMap { case (id, t) =>
-      (0 to t.length - k).map(i => (id, i + 1L, t.substring(i, i + k)))
+                            k: Int): Seq[(Long, Long, Long, Long)] =
+    dupSpansBruteBytes(rows.map { case (id, t) => (id, t.getBytes("UTF-8")) }, k)
+
+  private def dupSpansBruteBytes(rows: Seq[(Long, Array[Byte])],
+                                 k: Int): Seq[(Long, Long, Long, Long)] = {
+    def width(b: Byte): Int = b & 0xFF match {
+      case x if x >= 0xC2 && x <= 0xDF => 2
+      case x if x >= 0xE0 && x <= 0xEF => 3
+      case x if x >= 0xF0 && x <= 0xF4 => 4
+      case _ => 1
+    }
+    val grams = rows.flatMap { case (id, b) =>
+      val starts = Iterator.iterate(0)(i => i + width(b(i))).takeWhile(_ < b.length)
+        .toIndexedSeq :+ b.length
+      (0 to starts.length - 1 - k).map(i =>
+        (id, i + 1L, b.slice(starts(i), starts(i + k)).toSeq))
     }
     val cnt = grams.groupBy(_._3).view.mapValues(_.size).toMap
-    grams.filter(g => cnt(g._3) > 1).groupBy(_._1).flatMap { case (id, gs) =>
+    grams.filter(g => cnt(g._3) > 1).groupBy(_._1).toSeq.flatMap { case (id, gs) =>
       val ps = gs.map(_._2).sorted
       // islands: split where the position step exceeds 1
       val islands = ps.foldLeft(List.empty[List[Long]]) {
@@ -3002,8 +3018,11 @@ class DataOpsSpec extends AnyFunSuite {
         case (acc, p) => List(p) :: acc
       }
       islands.map(isl => (id, isl.min, isl.max + (k - 1), isl.max + k - isl.min))
-    }.toSet
+    }.sorted
   }
+
+  private def spanRows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
 
   test("dupSpans: crafted cross-doc duplicate, exact span bounds") {
     import spark.implicits._
@@ -3013,20 +3032,49 @@ class DataOpsSpec extends AnyFunSuite {
       (1L, "xxwqzABCDEFGHIJKLMNOyyprk"),
       (2L, "ztABCDEFGHIJKLMNOqhnvjduw"),
       (3L, "completely unrelated text"))
-    val out = TextAnalysis.dupSpans(rows.toDF("doc_id", "text"),
-      col("doc_id"), col("text"), k = 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(out.toSet === Set((1L, 6L, 20L, 15L), (2L, 3L, 17L, 15L)))
-    assert(out.toSet === dupSpansBrute(rows, 10))
+    val out = spanRows(TextAnalysis.dupSpans(rows.toDF("doc_id", "text"),
+      col("doc_id"), col("text"), k = 10))
+    assert(out === Seq((1L, 6L, 20L, 15L), (2L, 3L, 17L, 15L)))
+    assert(out === dupSpansBrute(rows, 10))
   }
 
   test("dupSpans matches the brute k-gram count on the real corpus") {
     val rows = docs.select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val got = TextAnalysis.dupSpans(docs, col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val got = spanRows(TextAnalysis.dupSpans(docs, col("doc_id"), col("text")))
     assert(got === dupSpansBrute(rows, 30))
     assert(got.nonEmpty, "fixture must contain duplicated substrings")
+  }
+
+  test("dupSpans on multi-byte text: straddling grams, k-1/k/k+1 chars, invalid and truncated UTF-8") {
+    import spark.implicits._
+    val k = 5
+    // é 2 bytes, € 3, 😀 4: the shared block puts each width at a gram edge
+    val block = "é€😀aé€😀b"
+    val u = (s: String) => s.getBytes("UTF-8")
+    val truncEuro = u("€").take(2)          // E2 82: a 3-byte lead cut short
+    val crafted = Seq(
+      1L -> u(s"x$block€y"),
+      2L -> u(s"😀😀$block"),
+      3L -> u("é€😀a"),                     // k-1 chars
+      4L -> u("é€😀aé"),                    // k chars: its one gram repeats in 1/2
+      5L -> u("z€😀aé€"),                   // k+1 chars
+      6L -> (u("qq€😀a") ++ truncEuro),     // ends in a truncated sequence
+      7L -> (u("rq€😀a") ++ truncEuro),     // same truncated last gram as 6
+      // a stray continuation byte and two invalid lead bytes, one char each
+      8L -> (u("a") ++ Array(0x80, 0xFF, 0xC0).map(_.toByte) ++ u("é€😀aé€😀")))
+    // and a seeded random corpus over a mixed-width alphabet, where short
+    // grams repeat often
+    val rnd = new scala.util.Random(7L)
+    val alphabet = Seq(u("a"), u("é"), u("€"), u("😀"), Array(0x80.toByte), truncEuro)
+    val random = (20L until 60L).map(id =>
+      id -> Array.fill(rnd.nextInt(14))(alphabet(rnd.nextInt(alphabet.length))).flatten)
+    for ((rows, kk) <- Seq(crafted -> k, random -> 3, random -> 2)) {
+      val df = rows.toDF("doc_id", "b").select(col("doc_id"), col("b").cast("string").as("text"))
+      val got = spanRows(TextAnalysis.dupSpans(df, col("doc_id"), col("text"), kk))
+      assert(got === dupSpansBruteBytes(rows, kk), s"k=$kk")
+      assert(got.nonEmpty, s"k=$kk")
+    }
   }
 
   /** In-memory reference for [[TextAnalysis.textRank]]: the same integer
